@@ -92,5 +92,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // native as-of join: custom logical node → AsOfJoinExec (the
     // custom-operator ladder's SparkPlan rung)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // adaptive re-plan: finish a query whose materialized stage is small
+    // in one partition (no range exchange, no sampling job)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallResultMerge)
   }
 }

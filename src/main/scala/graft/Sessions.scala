@@ -9,10 +9,15 @@ import org.apache.spark.sql.SparkSession
   * at once. */
 object Sessions {
 
-  /** `local[cpus]` session with shuffle partitions = cpus (SURVEY §6: 32
-    * for the driver's local[32] box, overridable via SPARK_GRAFT_CPUS). */
+  /** Worker threads for a local session: SPARK_GRAFT_CPUS when set, else
+    * the processors this JVM may use. */
+  def defaultCpus(env: Map[String, String] = sys.env): String =
+    env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+
+  /** `local[cpus]` session with shuffle partitions = cpus. */
   def local(
-      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cpus: String = defaultCpus(),
       logLevel: String = "WARN"): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -1,16 +1,23 @@
 package graft
 
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Fixture-table loaders.
   *
   * The reference declares fixed, explicit schemas per engine
   * (reference: clickhouse-init/01-create-table.sql:53-73, init.sql:27-70);
   * our tables are driver-generated Parquet (TESTDATA.md) whose footer schema
-  * IS the declared schema, so loading is `spark.read.parquet` — Catalyst gets
-  * column pruning + filter pushdown + vectorized scan for free.
+  * IS the declared schema. Loads go through [[parquet]]: the footer
+  * schema is inferred once per session and table content ([[FsStamp]]),
+  * then handed back with `.schema(...)`, so a repeated load runs no
+  * schema-inference job while the file listing stays fresh on every
+  * call. Catalyst still gets column pruning + filter pushdown +
+  * vectorized scan for free.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -19,8 +26,34 @@ object Tables {
 
   def path(sfDir: String, table: String): String = s"$sfDir/$table.parquet"
 
+  /** session → (path → (content stamp, inferred schema)); one entry per
+    * path, replaced when the stamp moves, so a rewrite re-infers and the
+    * memo never grows past the set of paths read */
+  private val schemas = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, (Long, StructType)]]())
+
+  /** `spark.read.parquet(path)` without the per-call schema-inference job.
+    * The stamp is taken BEFORE inferring, so a rewrite racing the
+    * inference can only pair a newer schema with an older stamp, which
+    * the next call's stamp no longer matches. Paths that are not local
+    * directories or files (no stamp to key on) are read as before. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    if (!new java.io.File(path).exists()) spark.read.parquet(path)
+    else {
+      val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+      val stamp = FsStamp.of(path)
+      Option(memo.get(path)) match {
+        case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          memo.put(path, (stamp, df.schema))
+          df
+      }
+    }
+
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(path(sfDir, table))
+    val df = parquet(spark, path(sfDir, table))
     // events.ts normalizes to microsecond TimestampType whatever the fixture
     // generation wrote: TIMESTAMP(NANOS) parquet reads back as Long under
     // spark.sql.legacy.parquet.nanosAsLong (truncate to micros — same as

@@ -65,7 +65,7 @@ object ResultCache {
       if (!Files.exists(dir.resolve("_SUCCESS")))
         df.write.mode("overwrite").parquet(dir.toString)
     }
-    s.read.parquet(dir.toString)
+    Tables.parquet(s, dir.toString)
   }
 
   /** q250: the cache driven end to end over a representative rollup

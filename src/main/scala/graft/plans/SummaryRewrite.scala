@@ -135,9 +135,11 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       aggExprs: Seq[NamedExpression],
       path: String): Option[LogicalPlan] = {
     // analyzed plan of the summary table; reading it here (not at rule
-    // construction) keeps the rule stateless and the path re-bindable
+    // construction) keeps the rule stateless and the path re-bindable;
+    // the stamped schema memo runs schema inference (a Spark job) once
+    // per summary content, not on every optimizer pass
     val summary =
-      SparkSession.active.read.parquet(path).queryExecution.analyzed
+      graft.Tables.parquet(SparkSession.active, path).queryExecution.analyzed
     def sAttr(name: String): Option[Attribute] =
       summary.output.find(_.name == name)
 
