@@ -15,10 +15,10 @@ import org.apache.spark.sql.DataFrame
   * prior query × 2 runs, and the latency-sensitive queries late in
   * alphabetical order (q31/q44 streaming-shaped, q36/q48) regressed 2–4×
   * from the memory pressure. Construction and action run on the same
-  * thread in every entry point (Bench, Verify, PlanDump, tests), so a
-  * thread-local ledger + release-after-action gives each query a clean
-  * cache without a global `clearCache()` stomping on Verify's concurrent
-  * in-flight queries.
+  * thread in every entry point (Verify, RunOne, PlanDump, e2ebench,
+  * tests), so a thread-local ledger + release-after-action gives each
+  * query a clean cache without a global `clearCache()` stomping on
+  * Verify's concurrent in-flight queries.
   */
 object Caches {
   private val ledger =
@@ -62,12 +62,12 @@ object Caches {
     * driver log filled with "Block rdd_N already exists" (r7 verdict
     * item #4). ONLY safe between queries when no other query is in
     * flight — a checkpoint's lineage is truncated, so dropping its
-    * blocks mid-query would make recomputation impossible. Bench runs
+    * blocks mid-query would make recomputation impossible. RunOne runs
     * strictly sequentially, so it sweeps after every timed run; Verify
     * submits 4 queries concurrently and must NOT sweep per-query.
     *
     * `blocking = true` waits for the BlockManager to actually drop the
-    * blocks before returning — Bench/RunOne pass it so no timed run
+    * blocks before returning — RunOne passes it so no timed run
     * races an async free of the previous run's blocks (r7 verdict: the
     * non-blocking sweep raced the next timed run and second runs
     * degraded up to 11× on the driver box while CPU probes stayed

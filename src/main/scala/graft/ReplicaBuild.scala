@@ -1,9 +1,9 @@
 package graft
 
-/** Dev harness: materialize the bench's N× replica fixture for a source
-  * dir so [[RunOne]] can A/B sweep rows at sweep scale without running
-  * the whole bench (the replicas are content-keyed and reused by Bench
-  * itself — this builds exactly what [[BenchScale.ensure]] builds).
+/** Dev harness: materialize an N× replica fixture for a source dir so
+  * [[RunOne]] can time a query at replica scale (this builds exactly what
+  * [[BenchScale.ensure]] builds, and the replica is reused until tmp is
+  * cleared).
   * Usage: runMain graft.ReplicaBuild <srcDir> <copies> [table,table,…]
   * Prints the replica dir path on the last stdout line. */
 object ReplicaBuild {

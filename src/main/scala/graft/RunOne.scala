@@ -1,17 +1,11 @@
 package graft
 
-/** Dev harness: run ONE registered query by name against a fixture dir and
-  * print its row count and wall time — the per-query iteration loop that
-  * Verify (all queries, oracle dump) and Bench (all queries, timed sweep)
-  * are too coarse for. Usage: runMain graft.RunOne <name> [sfDir] [runs].
-  *
-  * With SPARK_GRAFT_RUNONE_JSON=1 the FINAL stdout line is a compact
-  * machine-readable record
-  * `{"runone":"<name>","runs":[s,…],"cal":[s,…],"gc_ms":[ms,…]}` — the
-  * contract [[Bench.forkRunOne]] parses when it re-measures a contested
-  * bench row in a fresh JVM (r7 verdict items #2/#6: the adjudication
-  * protocol that cleared q02@50×/q231/q279 by hand in r7, now automated
-  * into the artifact). */
+/** Dev loop: run ONE registered query by name against a fixture dir and
+  * print, per run, the rows its `collect()` returned and the wall time —
+  * timed the way `e2ebench` times an op, so the plan measured is the plan
+  * users run (a `.count()` lets Catalyst prune aggregates and sorts).
+  * Verify (all queries, oracle dump) is too coarse for per-query work.
+  * Usage: runMain graft.RunOne <name> [sfDir] [runs]. */
 object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -20,51 +14,27 @@ object RunOne {
     val spark = Sessions.local()
     val fn = SparkEntry.queries.getOrElse(
       name, sys.error(s"unknown query: $name"))
-    // warm the session exactly like Bench (executor threads, codegen,
-    // parquet reader, shuffle machinery) so run 1 measures the QUERY
-    // cold, not the JVM cold — without this a forked triage "warm" run
-    // still pays Spark-internal JIT and reads high (r8 smoke: q360
-    // forked-warm 15.4 s vs 4.1 s in-process, purely JVM-cold bias)
-    // guarded: a fixture/replica dir without lineitem (e.g. a documents-
-    // only store replica) must still serve the named query — the warm-up
-    // is an optimization, never a precondition
+    // warm the session (executor threads, codegen, parquet reader,
+    // shuffle machinery) so run 1 measures the QUERY cold, not the JVM
+    // cold. Guarded: a fixture/replica dir without lineitem (e.g. a
+    // documents-only store replica) must still serve the named query —
+    // the warm-up is an optimization, never a precondition
     try Tables.load(spark, sfDir, "lineitem")
-      .groupBy("l_returnflag").count().count()
+      .groupBy("l_returnflag").count().collect()
     catch {
       case t: Throwable =>
         System.err.println(s"[runone] warm-up skipped ($t)")
     }
-    val keepCache = sys.env.getOrElse("SPARK_GRAFT_KEEP_CACHE", "0") != "0"
-    val rec = (1 to runs).map { i =>
-      // per-run CPU probe (Bench.calibrate) + GC/heap probes (r8): a
-      // stalled box shows an inflated CPU probe, heap pressure shows an
-      // exploded GC delta — triage verdicts (stall vs contamination vs
-      // regression) are arithmetic on the record
-      val cal = Bench.calibrate()
-      val g0 = Bench.gcMillis()
+    (1 to runs).foreach { i =>
       val t0 = System.nanoTime()
-      // SPARK_GRAFT_KEEP_CACHE=1 preserves persisted frames across runs —
-      // ONLY for reproducing cross-run cache-accretion effects (the
-      // pre-round-3 bench regime); never how Bench measures
       val n =
-        try fn(spark, sfDir).count()
-        finally if (!keepCache) Caches.release()
+        try fn(spark, sfDir).collect().length
+        finally Caches.release()
       val dt = (System.nanoTime() - t0) / 1e9
-      val gcd = Bench.gcMillis() - g0
-      println(f"[runone] $name run $i: $n rows, " +
-        f"$dt%.2f s (cal $cal%.3f s, gc $gcd ms)")
-      // free localCheckpoint blocks between runs, like Bench — BLOCKING,
-      // so no run races the async free of its predecessor's blocks
-      if (!keepCache) Caches.sweepOrphans(spark, blocking = true)
-      (dt, cal, gcd)
-    }
-    if (sys.env.getOrElse("SPARK_GRAFT_RUNONE_JSON", "0") == "1") {
-      def f(d: Double): String =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-      println(s"""{"runone":"$name","runs":${rec.map(r => f(r._1))
-          .mkString("[", ",", "]")},"cal":${rec.map(r => f(r._2))
-          .mkString("[", ",", "]")},"gc_ms":${rec.map(_._3)
-          .mkString("[", ",", "]")}}""")
+      println(f"[runone] $name run $i: $n rows collected, $dt%.2f s")
+      // free localCheckpoint blocks between runs — BLOCKING, so no run
+      // races the async free of its predecessor's blocks
+      Caches.sweepOrphans(spark, blocking = true)
     }
     spark.stop()
   }

@@ -70,7 +70,7 @@ object Tables {
     }
   }
 
-  /** Session config every entry point (Verify/Bench/tests) must apply. */
+  /** Session config every entry point must apply ([[Sessions.local]]). */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -4,6 +4,22 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Collects query `name` and writes the collected rows, with the
+    * result's schema, as one parquet file under `outDir/name`. The oracle
+    * thereby checks the rows of the plan `collect()` runs — the one users,
+    * specs and `e2ebench` run — not a plan re-shaped by a write. Releases
+    * the query's cached frames; construction and action share the calling
+    * thread, so the thread-local ledger holds exactly this query's. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      name: String): Unit =
+    try {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val rows = df.collect()
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    } finally Caches.release()
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args restrict the dump to named queries — the
@@ -12,23 +28,19 @@ object Verify {
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // concurrent query submission: Spark schedules jobs from multiple
-    // driver threads fairly; 4 in flight keeps the 32 cores busy while
-    // single-stage queries come and go (≈2× faster than sequential)
+    // driver threads fairly, and 4 in flight keep the session's worker
+    // threads busy while single-stage queries come and go
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-    val futures = selected.map { case (name, fn) =>
+    val selected = SparkEntry.queries.keys.toSeq
+      .filter(name => only.isEmpty || only.contains(name))
+    val futures = selected.map { name =>
       scala.concurrent.Future {
-        // construction and action share this thread, so the thread-local
-        // cache ledger releases exactly this query's persisted frames
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try dump(spark, sfDir, outDir, name)
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        finally Caches.release()
       }
     }
     scala.concurrent.Await.result(

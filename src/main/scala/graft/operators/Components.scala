@@ -48,7 +48,6 @@ object Components {
       pairs: DataFrame,
       maxRounds: Int = 32,
       tag: String = "cc"): DataFrame = {
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
     val p0 = pairs.toDF("src", "dst")
     // dst-partitioned ONCE (r9, guide §2.4 "establish the partitioning
     // once"): the edge set is static across rounds, and with the
@@ -112,7 +111,6 @@ object Components {
     var changed = true
     var rounds = 0
     while (changed && rounds < maxRounds) {
-      val tRound = System.nanoTime()
       val nbrMin = edges
         .join(
           maybeBcast(
@@ -163,11 +161,6 @@ object Components {
       prevSum = newSum
       labels = jumped
       rounds += 1
-      if (debug)
-        System.err.println(s"[$tag] round $rounds: changed=$changed " +
-          f"(lblSum=$newSum) in ${(System.nanoTime() - tRound) / 1e9}%.2f s " +
-          s"(parts edges=${edges.rdd.getNumPartitions} " +
-          s"labels=${labels.rdd.getNumPartitions})")
     }
     require(!changed,
       s"$tag: label propagation did not converge in $rounds rounds")

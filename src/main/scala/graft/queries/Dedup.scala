@@ -453,22 +453,6 @@ object Dedup {
       .filter(col("jaccard") >= t)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
-  /** SPARK_GRAFT_DEBUG stage probe (the Components round-timer pattern):
-    * times a count() of the stage and prints rows + CUMULATIVE wall
-    * time (each probe re-evaluates its prefix — read deltas between
-    * probes). Identity when the flag is off; never materializes
-    * (checkpointing a 50M-row event stage would OOM the probe itself). */
-  private def probe(df: org.apache.spark.sql.DataFrame, tag: String)
-      : org.apache.spark.sql.DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_DEBUG")) {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      System.err.println(
-        f"[jp] $tag: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    df
-  }
-
   def jaccardPairs(docs: org.apache.spark.sql.DataFrame, t: Double)
       : org.apache.spark.sql.DataFrame = {
     // Candidates via POSTING LISTS instead of the prefix-row self-join
@@ -502,9 +486,7 @@ object Dedup {
         s"""struct($x.doc_id AS doc_a, $x.sz AS la, $x.pos AS ia,
                    $y.doc_id AS doc_b, $y.sz AS lb, $y.pos AS ib)""")
       .select(col("p.*"))
-    val candidates = probe(pairsFromEvents(probe(events, "events"), t),
-      "candidates")
-    probe(verifyJaccard(candidates, enc, enc, t), "verified")
+    verifyJaccard(pairsFromEvents(events, t), enc, enc, t)
   }
 
   /** Asymmetric prefix-filtered similarity join: pairs (doc_a ∈ probe,
@@ -1445,9 +1427,9 @@ object Dedup {
     * First run per fixture content builds + publishes the old-corpus
     * labels (q236's state bill, paid once); every later run pays ONLY
     * the increment — load the state TSV, cross/new-new similarity,
-    * contracted-star label merge. Bench's "headline = last run"
-    * convention therefore measures the real increment bill, which is
-    * the number q236 could not produce. The result is IDENTICAL on both
+    * contracted-star label merge. A warm RunOne run therefore measures
+    * the real increment bill, which is the number q236 could not
+    * produce. The result is IDENTICAL on both
     * paths (min-id labels are stable under increments — q236's doc),
     * so the oracle stays q68's recursive SQL VERBATIM: full-recompute
     * equality, now proven against a state that crossed a serialization

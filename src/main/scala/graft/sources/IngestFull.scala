@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * `plans/ingest_full.txt`.
   *
   * Usage: runMain graft.sources.IngestFull [sfDir] (default sf0.1; the
-  * 50x replica is built/reused via BenchScale like the bench sweep).
+  * 50x replica is built/reused via BenchScale).
   */
 object IngestFull {
   private val csvSchema = StructType(Seq(

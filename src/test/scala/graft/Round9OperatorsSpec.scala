@@ -333,7 +333,7 @@ class Round9OperatorsSpec extends SparkSpec {
         val c = java.util.Calendar.getInstance(
           java.util.TimeZone.getTimeZone("UTC"))
         c.setTime(ts)
-        // Verify/Bench sessions run in UTC (Tables.sessionConfigs)
+        // Sessions.local sessions run in UTC (Tables.sessionConfigs)
         c.get(java.util.Calendar.YEAR) * 12 +
           c.get(java.util.Calendar.MONTH) + 1
       }

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.JobCount
+import org.apache.spark.{JobCount, QueryPlans}
+import org.apache.spark.QueryPlans.nodes
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.CoalesceExec
 import org.apache.spark.sql.functions.{col, count, lit, max}
 
 /** [[graft.plans.SmallResultMerge]]: a small materialized stage finishes
@@ -17,19 +15,8 @@ class SmallResultMergeSpec extends SparkSpec {
     "q01_agg_by_type", "q02_rollup_month",
     "q03_yoy_window", "q04_topn_percentiles")
 
-  /** Every node of the final adaptive plan, through query stages. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case _ => p.children.flatMap(nodes)
-  })
-
   private def rangeExchanges(df: DataFrame): Int =
-    nodes(df.queryExecution.executedPlan).count {
-      case e: ShuffleExchangeLike =>
-        e.outputPartitioning.isInstanceOf[RangePartitioning]
-      case _ => false
-    }
+    QueryPlans.rangeExchanges(df.queryExecution.executedPlan)
 
   private def query(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sf001)

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (Spark
   * sessions are expensive; ScalaTest suites run sequentially in the forked
-  * JVM) configured exactly like Verify/Bench via Tables.sessionConfigs.
+  * JVM) built by [[Sessions.local]], so tests run exactly the mains'
+  * session config, on 4 worker threads and 4 shuffle partitions.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,15 +15,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local(cpus = "4")
 }

@@ -50,7 +50,7 @@ class VecDotSpec extends SparkSpec {
 
   test("extension registers vec_dot for SQL entry points") {
     // GraftExtensions rides Tables.sessionConfigs, so the shared session
-    // (and Verify/Bench sessions) have vec_dot registered for spark.sql
+    // (and every Sessions.local session) has vec_dot registered for spark.sql
     val r = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .collect().head.getDouble(0)
