@@ -27,9 +27,9 @@ object BenchScale {
     "part" -> Seq("p_partkey"))
 
   /** `tables` restricts which fixtures are replicated to what the
-    * caller's sweep actually reads — the 50× sweep replicates
-    * lineitem+orders (core-4) and, since r6, documents (the q24/q68/
-    * q127 dedup rows), but still skips the events build it never
+    * caller actually reads — `e2ebench` replicates lineitem+orders
+    * (olap) or lineitem alone (ingest), `IngestFull` lineitem alone —
+    * so a caller skips the builds (events, documents, part) it never
     * touches. */
   def ensure(spark: SparkSession, srcDir: String, copies: Int,
       tables: Seq[String] = keyCols.keys.toSeq.sorted): String = {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.types.DoubleType
 import graft.functions.{BloomMd5, CountMinMd5, HllMd5, KmvMd5, NfcNormalize, TDigestQuantile, VecDot}
 
 /** Engine extensions, installed with
@@ -13,75 +15,42 @@ import graft.functions.{BloomMd5, CountMinMd5, HllMd5, KmvMd5, NfcNormalize, TDi
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    /** Registers SQL function `name`, rejecting a call with other than
+      * `arity` arguments ("<name> expects <expects>, got <n><unit>"). */
+    def checked(name: String, info: ExpressionInfo, arity: Int = 1,
+        expects: String = "exactly 1 argument", unit: String = "")(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), info,
+        (children: Seq[Expression]) => {
+          if (children.length != arity)
+            throw new IllegalArgumentException(
+              s"$name expects $expects, got ${children.length}$unit")
+          build(children)
+        }))
     ext.injectFunction(
       (FunctionIdentifier("vec_dot"), VecDot.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VecDot(children(0), children(1))))
-    // portable HLL sketch aggregate (the analyzer wraps the returned
-    // AggregateFunction into an AggregateExpression)
+        (children: Seq[Expression]) => VecDot(children(0), children(1))))
     // Unicode NFC canonicalization — same spelling as DuckDB's built-in,
     // so oracle twins share the SQL text verbatim
-    ext.injectFunction(
-      (FunctionIdentifier("nfc_normalize"), NfcNormalize.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          if (children.length != 1)
-            throw new IllegalArgumentException(
-              s"nfc_normalize expects exactly 1 argument, got ${children.length}")
-          NfcNormalize(children.head)
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier("hll_md5"), HllMd5.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          if (children.length != 1)
-            throw new IllegalArgumentException(
-              s"hll_md5 expects exactly 1 argument, got ${children.length}")
-          HllMd5(children.head)
-        }))
+    checked("nfc_normalize", NfcNormalize.info)(c => NfcNormalize(c.head))
+    // portable HLL sketch aggregate (the analyzer wraps the returned
+    // AggregateFunction into an AggregateExpression)
+    checked("hll_md5", HllMd5.info)(c => HllMd5(c.head))
     // KMV / bottom-k distinct sketch — the set-operation-capable sibling
     // of hll_md5 (union/intersection/Jaccard estimates from merged
     // sketches)
-    ext.injectFunction(
-      (FunctionIdentifier("kmv_md5"), KmvMd5.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          if (children.length != 1)
-            throw new IllegalArgumentException(
-              s"kmv_md5 expects exactly 1 argument, got ${children.length}")
-          KmvMd5(children.head)
-        }))
+    checked("kmv_md5", KmvMd5.info)(c => KmvMd5(c.head))
     // t-digest quantile sketch (the reference's quantileTDigest analog);
     // the percentage is cast to DOUBLE so the natural spelling
     // tdigest_quantile(col, 0.5) works — Spark parses 0.5 as DECIMAL(1,1)
-    ext.injectFunction(
-      (FunctionIdentifier("tdigest_quantile"), TDigestQuantile.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          if (children.length != 2)
-            throw new IllegalArgumentException(
-              s"tdigest_quantile expects (col, q), got ${children.length} args")
-          TDigestQuantile(
-            children(0),
-            org.apache.spark.sql.catalyst.expressions.Cast(
-              children(1), org.apache.spark.sql.types.DoubleType))
-        }))
+    checked("tdigest_quantile", TDigestQuantile.info, 2, "(col, q)", " args")(
+      c => TDigestQuantile(c(0), Cast(c(1), DoubleType)))
     // count-min frequency sketch (heavy hitters without a vocabulary
     // shuffle)
-    ext.injectFunction(
-      (FunctionIdentifier("cms_md5"), CountMinMd5.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          if (children.length != 1)
-            throw new IllegalArgumentException(
-              s"cms_md5 expects exactly 1 argument, got ${children.length}")
-          CountMinMd5(children.head)
-        }))
+    checked("cms_md5", CountMinMd5.info)(c => CountMinMd5(c.head))
     // bloom membership filter (runtime semi-join pruning without a
     // build-side shuffle)
-    ext.injectFunction(
-      (FunctionIdentifier("bloom_md5"), BloomMd5.info,
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          if (children.length != 1)
-            throw new IllegalArgumentException(
-              s"bloom_md5 expects exactly 1 argument, got ${children.length}")
-          BloomMd5(children.head)
-        }))
+    checked("bloom_md5", BloomMd5.info)(c => BloomMd5(c.head))
     // flag-gated percentile→sketch rewrite (SURVEY §7.5c); off by default
     ext.injectOptimizerRule(_ => graft.plans.ApproxPercentileRewrite)
     // flag-gated COUNT(DISTINCT)→HLL++ rewrite; off by default

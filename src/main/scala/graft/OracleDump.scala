@@ -9,8 +9,13 @@ import java.nio.file.{Files, Paths}
   * predecessor twice doubles the plan per step and one such twin can hang
   * the driver's whole-round compare — r7 verdict item #1). */
 object OracleDump {
-  def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "/tmp/oracle_sql.json"
+
+  /** Writes `twins` (query name → DuckDB SQL) to `path` as one JSON
+    * object, in the map's iteration order. */
+  def write(path: String, twins: Iterable[(String, String)]): Unit = {
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in hand-written twin SQL would otherwise make a
+    // json.load of the dump fail
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -20,9 +25,14 @@ object OracleDump {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = twins
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    Files.writeString(Paths.get(path), json)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = if (args.nonEmpty) args(0) else "/tmp/oracle_sql.json"
+    write(out, SparkEntry.oracleSql)
     println(s"wrote ${SparkEntry.oracleSql.size} oracle twins to $out")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -47,22 +46,8 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    OracleDump.write(s"$outDir/oracle_sql.json", SparkEntry.oracleSql
+      .filter { case (k, _) => only.isEmpty || only.contains(k) })
     spark.stop()
   }
 }

@@ -86,28 +86,19 @@ object Components {
     // broadcast-join → in-place groupBy(dst) with ZERO exchanges over
     // the edge set. The decision uses the MATERIALIZED node count (the
     // labels frame is already checkpointed; optimizer size estimates
-    // are opaque for LogicalRDD plans), sized against the session
-    // broadcast threshold at ~16 B per (id, lbl) row — at corpus scale
-    // the count exceeds it and every round falls back to the shuffled
-    // shape unchanged.
-    // r10 (ADVICE r9): a broadcast HashedRelation costs several-fold
+    // are opaque for LogicalRDD plans) through Gates.bcastIfUnder at
+    // its 64 B/row default: a broadcast HashedRelation costs several-fold
     // more than the 16 B of raw (id, lbl) payload per row — hash slots,
-    // UnsafeRow headers, growth slack — so the gate models 64 B/row.
-    // It is measured against the ITERATION broadcast ceiling
-    // spark.graft.iterBroadcastBytes (default 128 MB; q427's adjacency
-    // gate shares it): per-round label broadcasts are rebuilt and
-    // dropped every round, and guide §3.1 puts the comfortable
-    // broadcast range at a few hundred MB — the session-wide 10 MB
-    // autoBroadcastJoinThreshold is tuned for long-lived plan-time
-    // relations, and gating on it would force EVERY round of a
-    // 250k-node clustering through two label shuffles (measured 17%
-    // slower end-to-end at the 50× sweep). Beyond the ceiling each
-    // round falls back to the shuffled shape unchanged; production
-    // sizes the conf from executor memory.
-    val bcastRows = Gates.iterBroadcastBytes(nodes.sparkSession) / 64
+    // UnsafeRow headers, growth slack (r10). The ceiling is the
+    // ITERATION broadcast budget (128 MB; q427's adjacency gate shares
+    // it): per-round label broadcasts are rebuilt and dropped every
+    // round, and the session-wide 10 MB autoBroadcastJoinThreshold is
+    // tuned for long-lived plan-time relations — gating on it would
+    // force EVERY round of a 250k-node clustering through two label
+    // shuffles (measured 17% slower end-to-end, r10). Beyond the
+    // ceiling each round falls back to the shuffled shape unchanged.
     val nNodes = obs0.get("n") match { case n: Long => n; case _ => 0L }
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (nNodes <= bcastRows) broadcast(df) else df
+    def maybeBcast(df: DataFrame): DataFrame = Gates.bcastIfUnder(df, nNodes)
     var changed = true
     var rounds = 0
     while (changed && rounds < maxRounds) {

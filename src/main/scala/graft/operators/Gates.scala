@@ -1,29 +1,22 @@
 package graft.operators
 
-import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.SparkSession
-
-/** Shared size ceilings for MEASURED broadcast decisions inside
+/** Shared size ceiling for MEASURED broadcast decisions inside
   * iterative operators (connected components' per-round label frames,
-  * k-truss's per-peel adjacency). These gates differ from
-  * [[Hints.autoBroadcast]] in both input and threshold: the row/element
-  * counts are exactly known (materialized frames), so the bytes model
-  * is trustworthy where optimizer estimates over checkpointed/cached
-  * inputs are not; and the ceiling is the per-round broadcast budget —
-  * guide §3.1's "a few hundred MB is usually fine" — rather than the
-  * session autoBroadcastJoinThreshold, which is sized for plan-time
+  * k-truss's per-peel adjacency). Every other join is left to Spark's
+  * planner, which broadcasts a side whose estimate fits
+  * `spark.sql.autoBroadcastJoinThreshold` (and AQE converts at run time).
+  * These gates differ from that rule in both input and threshold: the
+  * row/element counts are exactly known (materialized frames), so the
+  * bytes model is trustworthy where optimizer estimates over
+  * checkpointed/cached inputs are not; and the ceiling is the per-round
+  * broadcast budget — guide §3.1's "a few hundred MB is usually fine" —
+  * rather than the session threshold, which is sized for plan-time
   * estimate errors on long-lived relations. Past the ceiling every
   * caller falls back to its shuffled shape unchanged.
   */
 object Gates {
-  /** Ceiling in bytes for per-iteration broadcasts,
-    * `spark.graft.iterBroadcastBytes` (default 128m). Production sets
-    * it from executor memory; local default keeps the driver's bench
-    * comparable. */
-  def iterBroadcastBytes(s: SparkSession): Long =
-    scala.util.Try(JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.graft.iterBroadcastBytes", "128m")))
-      .getOrElse(128L << 20)
+  /** Ceiling in bytes for per-iteration broadcasts (128 MB). */
+  private val iterBroadcastBytes: Long = 128L << 20
 
   /** Broadcast `df` iff `rows` (a MEASURED count — the caller owns an
     * exact figure from a checkpoint/materialization, which is why this
@@ -35,7 +28,7 @@ object Gates {
       df: org.apache.spark.sql.DataFrame,
       rows: Long,
       bytesPerRow: Long = 64L): org.apache.spark.sql.DataFrame =
-    if (rows * bytesPerRow <= iterBroadcastBytes(df.sparkSession))
+    if (rows * bytesPerRow <= iterBroadcastBytes)
       org.apache.spark.sql.functions.broadcast(df)
     else df
 

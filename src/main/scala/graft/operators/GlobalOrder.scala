@@ -164,9 +164,9 @@ object GlobalOrder {
     * single-partition window. The primitive behind skyline/frontier
     * pruning (q194): "is any earlier-in-order row at least this high?"
     *
-    * REQUIRES DISTINCT `order` KEYS (asserted at runtime; set
-    * `spark.graft.cummax.assertDistinctOrder=false` to skip the check
-    * when distinctness is proven upstream). With duplicate keys the result is
+    * REQUIRES DISTINCT `order` KEYS (asserted at runtime; pass
+    * `assertDistinct = false` to skip the check when distinctness is
+    * proven upstream). With duplicate keys the result is
     * partition-placement-dependent: a tied row that range-partitions
     * into a LATER partition is counted by the broadcast offset as
     * strictly earlier, while a tied row in the SAME partition is
@@ -205,10 +205,9 @@ object GlobalOrder {
     // key value), so any duplicate is ADJACENT; one shuffle-free
     // adjacent-equality scan over the cache finds it. Cost model: one
     // extra cache scan per call, zero shuffles, zero upstream recompute;
-    // the flag lets a caller that proved distinctness upstream (q194's
-    // groupBy) skip even that.
-    if (assertDistinct && df.sparkSession.conf
-        .get("spark.graft.cummax.assertDistinctOrder", "true").toBoolean) {
+    // `assertDistinct = false` lets a caller that proved distinctness
+    // upstream (q194's groupBy) skip even that.
+    if (assertDistinct) {
       // strip SortOrder wrappers (col.desc) — projected keys must be bare
       val keys = order.map(org.apache.spark.sql.graftbridge.stripSortOrder)
       val hasDup = !sorted.select(keys: _*).rdd

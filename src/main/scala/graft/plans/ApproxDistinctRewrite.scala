@@ -31,18 +31,18 @@ import org.apache.spark.sql.internal.SQLConf
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 
   val FLAG = "spark.graft.approxDistinct.enabled"
-  val RSD = "spark.graft.approxDistinct.rsd"
+  /** Relative standard deviation of the sketch (approx_count_distinct's
+    * default). */
+  val RSD = 0.05
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val conf = SQLConf.get
-    if (!conf.getConfString(FLAG, "false").toBoolean) plan
+    if (!SQLConf.get.getConfString(FLAG, "false").toBoolean) plan
     else {
-      val rsd = conf.getConfString(RSD, "0.05").toDouble
       plan.transformAllExpressions {
         case ae @ AggregateExpression(Count(children), _, true, _, _)
             if children.length == 1 =>
           ae.copy(
-            aggregateFunction = HyperLogLogPlusPlus(children.head, rsd),
+            aggregateFunction = HyperLogLogPlusPlus(children.head, RSD),
             isDistinct = false)
       }
     }

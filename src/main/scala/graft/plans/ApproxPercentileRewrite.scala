@@ -23,13 +23,12 @@ import org.apache.spark.sql.internal.SQLConf
 object ApproxPercentileRewrite extends Rule[LogicalPlan] {
 
   val FLAG = "spark.graft.approxPercentile.enabled"
-  val ACCURACY = "spark.graft.approxPercentile.accuracy"
+  /** Sketch accuracy (Spark's approx_percentile default). */
+  val ACCURACY = 10000
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val conf = SQLConf.get
-    if (!conf.getConfString(FLAG, "false").toBoolean) plan
+    if (!SQLConf.get.getConfString(FLAG, "false").toBoolean) plan
     else {
-      val accuracy = conf.getConfString(ACCURACY, "10000").toInt
       plan.transformAllExpressions {
         // Percentile always yields DOUBLE (or ARRAY<DOUBLE>) but
         // ApproximatePercentile yields the CHILD's type — a long-typed
@@ -44,7 +43,7 @@ object ApproxPercentileRewrite extends Rule[LogicalPlan] {
             if p.frequencyExpression == Literal(1L) =>
           Cast(
             ae.copy(aggregateFunction = new ApproximatePercentile(
-              p.child, p.percentageExpression, Literal(accuracy))),
+              p.child, p.percentageExpression, Literal(ACCURACY))),
             p.dataType)
       }
     }

@@ -159,8 +159,8 @@ object Curation {
     * numbers aren't inflated by leaked test data. The eval set here is the
     * deterministic doc_id % 10 slice; its distinct 8-grams form the probe
     * side. At 100 TB the eval-gram table is benchmark-sized (millions of
-    * grams, not corpus-sized) — comfortably broadcast, which
-    * Hints.autoBroadcast decides from the size estimate; the corpus side
+    * grams, not corpus-sized) — comfortably broadcast, which the
+    * planner decides from the size estimate; the corpus side
     * streams through one explode + semi-join-shaped aggregation, no
     * corpus-wide shuffle of anything but matching grams. */
   val q71 = Q(
@@ -180,7 +180,7 @@ object Curation {
       val bench = grams.filter(col("doc_id") % 10 === 0)
         .select(col("g")).distinct()
       grams.filter(col("doc_id") % 10 =!= 0)
-        .join(graft.operators.Hints.autoBroadcast(bench), Seq("g"))
+        .join(bench, Seq("g"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_overlap"))
         .orderBy(col("doc_id"))
@@ -328,7 +328,7 @@ object Curation {
     * rewrites to on any engine: unmatched base rows pass through,
     * matched rows take the batch version, unmatched batch rows append.
     * Scale: one equi-join shuffle on the key (broadcast when the batch
-    * is small — Hints.autoBroadcast decides from the size estimate);
+    * is small — the planner decides from the size estimate);
     * no driver-side row handling. Output fingerprints content as md5 so
     * the oracle value-checks every merged row, not just counts. */
   val q107 = Q(
@@ -359,7 +359,7 @@ object Curation {
         .persistTracked()
       val untouched = base
         .join(
-          graft.operators.Hints.autoBroadcast(batch.select(col("doc_id"))),
+          batch.select(col("doc_id")),
           Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("text"), lit("carry").as("op"))
       untouched.unionByName(batch)
@@ -409,7 +409,6 @@ object Curation {
   val q153 = Q(
     "q153_dsir_weights",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       val tok = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           posexplode(split(col("text"), " ")))
@@ -423,8 +422,8 @@ object Curation {
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_t"),
         countDistinct(col("w")).as("v"))
       val ratios = tok
-        .join(autoBroadcast(cr), Seq("w"))
-        .join(autoBroadcast(ct), Seq("w"), "left_outer")
+        .join(cr, Seq("w"))
+        .join(ct, Seq("w"), "left_outer")
         .crossJoin(broadcast(totals))
         .withColumn(
           "r",
@@ -495,10 +494,9 @@ object Curation {
   val q156 = Q(
     "q156_k_anonymity",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       val k = 10L
       val cells = Tables.load(s, d, "customer")
-        .join(autoBroadcast(Tables.load(s, d, "nation")),
+        .join(Tables.load(s, d, "nation"),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
@@ -1007,10 +1005,9 @@ object Curation {
   val q263 = Q(
     "q263_l_diversity",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       val (k, l) = (10L, 3L)
       Tables.load(s, d, "customer")
-        .join(autoBroadcast(Tables.load(s, d, "nation")),
+        .join(Tables.load(s, d, "nation"),
           col("c_nationkey") === col("n_nationkey"))
         // +100000 shifts the worst-case -999.99 balance non-negative:
         // Spark `div` truncates toward zero, DuckDB `//` floors — they
@@ -1057,11 +1054,10 @@ object Curation {
   val q293 = Q(
     "q293_t_closeness",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       import org.apache.spark.sql.expressions.Window
       val (k, t) = (10L, 0.2)
       val banded = Tables.load(s, d, "customer")
-        .join(autoBroadcast(Tables.load(s, d, "nation")),
+        .join(Tables.load(s, d, "nation"),
           col("c_nationkey") === col("n_nationkey"))
         .withColumn("band", expr("(CAST(round(c_acctbal * 100) AS BIGINT)" +
           " + 100000) div 200000"))

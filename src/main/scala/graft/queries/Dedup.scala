@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.Caches.Tracked
-import graft.operators.{Gates, Hints}
+import graft.operators.Gates
 
 /** Near-duplicate detection operators (training-data-pipeline extension).
   *
@@ -148,8 +148,8 @@ object Dedup {
       // groupBy over the band frame and an in-operator sorted-id pair
       // explode (identical pair set to the old band self-join, which
       // shuffled and sorted two copies of the cached band frame); the
-      // shingle-set attach joins are size-conditionally broadcast so
-      // surviving pairs stream (guide §3.1)
+      // planner broadcasts the shingle-set attach joins while they fit
+      // the session threshold, so surviving pairs stream (guide §3.1)
       val candidates = boundedSelfPairs(
         bands
           .groupBy(col("band_id"), col("band_sig"))
@@ -161,11 +161,11 @@ object Dedup {
       val shingleSets = bands
         .select(col("doc_id"), col("shingles")).distinct()
       val pairs = candidates
-        .join(Hints.autoBroadcast(shingleSets.select(
-          col("doc_id").as("doc_a"), col("shingles").as("sa"))),
+        .join(shingleSets.select(
+          col("doc_id").as("doc_a"), col("shingles").as("sa")),
           Seq("doc_a"))
-        .join(Hints.autoBroadcast(shingleSets.select(
-          col("doc_id").as("doc_b"), col("shingles").as("sb"))),
+        .join(shingleSets.select(
+          col("doc_id").as("doc_b"), col("shingles").as("sb")),
           Seq("doc_b"))
       pairs
         // sorted-merge intersect size (r10, guide §1.2/§4): the shingle
@@ -323,11 +323,11 @@ object Dedup {
     // construction), so the fact-sized per-doc exchange carries 8-byte
     // ids instead of repeating the doc's string attributes per token.
     docs.select(col("doc_id"), explode(col("toks")).as("tok"))
-      .join(Hints.autoBroadcast(ranked), Seq("tok"))
+      .join(ranked, Seq("tok"))
       .groupBy(col("doc_id"))
       .agg(expr("sort_array(collect_list(rank))").as("tids"))
       .withColumn("sz", size(col("tids")))
-      .join(Hints.autoBroadcast(docs.select(keys.map(col): _*)),
+      .join(docs.select(keys.map(col): _*),
         Seq("doc_id"))
       .select((keys :+ "sz" :+ "tids").map(col): _*)
   }
@@ -426,17 +426,17 @@ object Dedup {
       setsA: org.apache.spark.sql.DataFrame,
       setsB: org.apache.spark.sql.DataFrame,
       t: Double): org.apache.spark.sql.DataFrame =
-    // rank-set sides are doc-sized and size-conditionally broadcast
-    // (r9, guide §3.1): when they fit, the candidate pairs stream
-    // through two broadcast-hash joins instead of being shuffled and
-    // sorted twice; beyond the threshold the joins fall back unchanged
+    // rank-set sides are doc-sized (r9, guide §3.1): when the planner
+    // (or AQE at run time) sees them fit the session threshold, the
+    // candidate pairs stream through broadcast-hash joins instead of
+    // being shuffled and sorted twice; beyond it they stay shuffled
     candidates
-      .join(Hints.autoBroadcast(setsA.select(
+      .join(setsA.select(
         col("doc_id").as("doc_a"), col("tids").as("ta"),
-        col("sz").as("la"))), Seq("doc_a"))
-      .join(Hints.autoBroadcast(setsB.select(
+        col("sz").as("la")), Seq("doc_a"))
+      .join(setsB.select(
         col("doc_id").as("doc_b"), col("tids").as("tb"),
-        col("sz").as("lb"))), Seq("doc_b"))
+        col("sz").as("lb")), Seq("doc_b"))
       .filter(
         least(col("la"), col("lb")).cast(DoubleType) >=
           greatest(col("la"), col("lb")) * t)
@@ -624,9 +624,10 @@ object Dedup {
       // then joins back to (doc, token) pairs and votes are 64
       // codegen'd SUM aggregates with map-side partial aggregation.
       // Signatures are mathematically identical to hashing per-document.
-      // The vocab-side broadcast is size-conditional (Hints.autoBroadcast):
-      // at 100 TB the vocab join runs as a plain shuffled join on `tok`,
-      // with AQE free to broadcast at runtime if the vocab is small.
+      // The vocab side is left to the planner: broadcast while its
+      // estimate fits the session threshold; at 100 TB the vocab join
+      // runs as a plain shuffled join on `tok`, with AQE free to
+      // broadcast at runtime if the vocab is small.
       val base = Tables.load(s, d, "documents")
         .select(
           col("doc_id"), col("lang"), col("source"),
@@ -639,7 +640,7 @@ object Dedup {
       val docTok = base.select(col("doc_id"), explode(col("toks")).as("tok"))
       val voteCols = (0 until 64).map(k =>
         sum(element_at(col("b"), k + 1) * lit(2) - lit(1)).as(s"v$k"))
-      val votes = docTok.join(Hints.autoBroadcast(vocab), Seq("tok"))
+      val votes = docTok.join(vocab, Seq("tok"))
         .groupBy(col("doc_id"))
         .agg(voteCols.head, voteCols.tail: _*)
       // pack the 64 sign bits into ONE BIGINT (bit values are Scala-time
@@ -1157,7 +1158,7 @@ object Dedup {
         .groupBy(col("sh")).agg(count(lit(1)).as("df"))
       val prefix = docs
         .select(col("doc_id"), explode(col("toks")).as("sh"))
-        .join(Hints.autoBroadcast(dfT), Seq("sh"))
+        .join(dfT, Seq("sh"))
         .groupBy(col("doc_id"))
         .agg(expr("transform(sort_array(collect_list(struct(df, sh))), " +
           "s -> s.sh)").as("sorted"))

@@ -797,7 +797,6 @@ object Olap {
   val q133 = Q(
     "q133_mad_outliers",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       import graft.Caches.Tracked
       val ev = Tables.load(s, d, "events")
         .select(
@@ -809,19 +808,19 @@ object Olap {
         .persistTracked()
       val counts = ranked.groupBy(col("event_type"))
         .agg(max(col("rn")).cast(LongType).as("n"))
-      val med = ranked.join(autoBroadcast(counts), Seq("event_type"))
+      val med = ranked.join(counts, Seq("event_type"))
         .filter(col("rn") === expr("(n * 50 + 99) div 100"))
         .select(col("event_type"), col("cents").as("med_cents"))
-      val dev = ranked.join(autoBroadcast(med), Seq("event_type"))
+      val dev = ranked.join(med, Seq("event_type"))
         .withColumn("ad", abs(col("cents") - col("med_cents")))
       val w2 = Window.partitionBy(col("event_type"))
         .orderBy(col("ad"), col("event_id"))
       val ranked2 = dev.withColumn("rn2", row_number().over(w2))
         .persistTracked()
-      val mad = ranked2.join(autoBroadcast(counts), Seq("event_type"))
+      val mad = ranked2.join(counts, Seq("event_type"))
         .filter(col("rn2") === expr("(n * 50 + 99) div 100"))
         .select(col("event_type"), col("ad").as("mad_cents"))
-      ranked2.join(autoBroadcast(mad), Seq("event_type"))
+      ranked2.join(mad, Seq("event_type"))
         .groupBy(col("event_type"))
         .agg(
           count(lit(1)).as("n"),
@@ -1064,12 +1063,10 @@ object Olap {
         .agg(count(lit(1)).as("n_ab"))
         .filter(col("n_ab") >= 3)
       pairs
-        .join(graft.operators.Hints.autoBroadcast(
-          partN.select(col("l_partkey").as("a"),
-            col("n_part").as("n_a"))), Seq("a"))
-        .join(graft.operators.Hints.autoBroadcast(
-          partN.select(col("l_partkey").as("b"),
-            col("n_part").as("n_b"))), Seq("b"))
+        .join(partN.select(col("l_partkey").as("a"),
+            col("n_part").as("n_a")), Seq("a"))
+        .join(partN.select(col("l_partkey").as("b"),
+            col("n_part").as("n_b")), Seq("b"))
         .crossJoin(broadcast(totalN))
         .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
           ((col("n_ab") * col("n_orders")).cast(DoubleType)
@@ -1224,7 +1221,6 @@ object Olap {
   val q147 = Q(
     "q147_shipping_delay",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       import graft.Caches.Tracked
       // r9 (guide §2.3 — shuffle fewer bytes): the exact ceil-rank
       // percentile VALUE depends only on the per-priority delay
@@ -1252,7 +1248,7 @@ object Olap {
           sum(col("delay") * col("c")).as("sum_d"),
           sum(when(col("delay") < 0, col("c")).otherwise(0L))
             .cast(LongType).as("n_anomalies"))
-      cum.join(autoBroadcast(counts), Seq("pri"))
+      cum.join(counts, Seq("pri"))
         .groupBy(col("pri"))
         .agg(
           max(col("n")).as("n"), max(col("n_anomalies")).as("n_anomalies"),
@@ -1682,14 +1678,12 @@ object Olap {
         .filter(col("nsup") >= 2 && col("nlate") === 1)
         .select(col("ok"))
       val blamed = l.filter(col("late"))
-        .join(graft.operators.Hints.autoBroadcast(perOrder),
-          col("l_orderkey") === col("ok"), "left_semi")
+        .join(perOrder, col("l_orderkey") === col("ok"), "left_semi")
       val sup = Tables.load(s, d, "supplier")
         .select(col("s_suppkey"), col("s_name"))
       blamed.groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("numwait"))
-        .join(graft.operators.Hints.autoBroadcast(sup),
-          col("l_suppkey") === col("s_suppkey"))
+        .join(sup, col("l_suppkey") === col("s_suppkey"))
         .select(col("s_name"), col("numwait"))
         .orderBy(desc("numwait"), col("s_name"))
         .limit(20)
@@ -2092,10 +2086,8 @@ object Olap {
         .groupBy(col("v")).agg(count(lit(1)).as("dg"))
         .persistTracked()
       val rk = (col("dg") * lit(1000000000000L) + col("v")).as("rk")
-      val degA = graft.operators.Hints.autoBroadcast(
-        deg.select(col("v").as("a"), rk.as("rka")))
-      val degB = graft.operators.Hints.autoBroadcast(
-        deg.select(col("v").as("b"), rk.as("rkb")))
+      val degA = deg.select(col("v").as("a"), rk.as("rka"))
+      val degB = deg.select(col("v").as("b"), rk.as("rkb"))
       // orient: lo = smaller (deg, id), hi = larger — acyclic total order
       val oriented = edges.join(degA, Seq("a")).join(degB, Seq("b"))
         .select(
@@ -2118,8 +2110,7 @@ object Olap {
         .persistTracked()
       val nTri = adjO
         .select(col("nbrs").as("na"), explode(col("nbrs")).as("lo"))
-        .join(graft.operators.Hints.autoBroadcast(
-          adjO.select(col("lo"), col("nbrs").as("nb"))), Seq("lo"))
+        .join(adjO.select(col("lo"), col("nbrs").as("nb")), Seq("lo"))
         // r10: two-pointer merge count over the sorted out-neighbor
         // arrays (guide §4) — same Σ d⁺ work, no per-edge hash set
         .agg(sum(graft.functions.IntersectSize.sorted(col("na"), col("nb")))
@@ -2183,8 +2174,7 @@ object Olap {
           revU.as("rev_u"))
       val pt = Tables.load(s, d, "part")
         .select(col("p_partkey"), col("p_type"))
-      li.join(graft.operators.Hints.autoBroadcast(pt),
-          col("l_partkey") === col("p_partkey"))
+      li.join(pt, col("l_partkey") === col("p_partkey"))
         .groupBy(col("ship_month"))
         .agg(
           sum(when(col("p_type") === "PROMO", col("rev_u"))
@@ -2249,10 +2239,8 @@ object Olap {
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey"))
         .agg(sum(col("rev_u")).as("lost_u"), count(lit(1)).as("n_items"))
-        .join(graft.operators.Hints.autoBroadcast(cust),
-          col("o_custkey") === col("c_custkey"))
-        .join(graft.operators.Hints.autoBroadcast(nat),
-          col("c_nationkey") === col("n_nationkey"))
+        .join(cust, col("o_custkey") === col("c_custkey"))
+        .join(nat, col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("c_name"), col("n_name"),
           (col("bal_c").cast(DoubleType) / lit(100.0)).as("acctbal"),
           col("n_items"),
@@ -2315,15 +2303,11 @@ object Olap {
         .select(col("n_nationkey").as("sn_key"),
           col("n_name").as("supp_nation"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(graft.operators.Hints.autoBroadcast(cust),
-          col("o_custkey") === col("c_custkey"))
-        .join(graft.operators.Hints.autoBroadcast(supp),
-          col("l_suppkey") === col("s_suppkey"))
+        .join(cust, col("o_custkey") === col("c_custkey"))
+        .join(supp, col("l_suppkey") === col("s_suppkey"))
         .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .join(graft.operators.Hints.autoBroadcast(natC),
-          col("c_nationkey") === col("cn_key"))
-        .join(graft.operators.Hints.autoBroadcast(natS),
-          col("s_nationkey") === col("sn_key"))
+        .join(natC, col("c_nationkey") === col("cn_key"))
+        .join(natS, col("s_nationkey") === col("sn_key"))
         .groupBy(col("cust_nation"), col("supp_nation"), col("ship_year"))
         .agg(count(lit(1)).as("n_items"),
           (sum(col("rev_u")).cast(DoubleType) / lit(10000.0)).as("volume"))
@@ -2372,8 +2356,7 @@ object Olap {
           && col("qty").between(15L, 35L)) ||
         (col("p_brand") === "Brand#34" && col("p_size").between(20, 50)
           && col("qty").between(30L, 50L))
-      li.join(graft.operators.Hints.autoBroadcast(pt),
-          col("l_partkey") === col("p_partkey"))
+      li.join(pt, col("l_partkey") === col("p_partkey"))
         .filter(cond)
         .agg(count(lit(1)).as("n_items"),
           (sum(col("price_c")).cast(DoubleType) / lit(100.0))
@@ -2505,10 +2488,8 @@ object Olap {
       val nat = Tables.load(s, d, "nation")
         .select(col("n_nationkey"), col("n_name"))
       val perNat = ord
-        .join(graft.operators.Hints.autoBroadcast(cust),
-          col("o_custkey") === col("c_custkey"))
-        .join(graft.operators.Hints.autoBroadcast(nat),
-          col("c_nationkey") === col("n_nationkey"))
+        .join(cust, col("o_custkey") === col("c_custkey"))
+        .join(nat, col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("o_orderpriority"), col("n_name"))
         .agg(sum(col("cents")).as("rev_c"))
       val w = Window.partitionBy(col("o_orderpriority"))
@@ -2884,31 +2865,25 @@ object Olap {
       val base = (15L * (scale / n)) / 100L
       var ranks = nodes.withColumn("r", lit(scale / n)).localCheckpoint()
       for (round <- 1 to 4) {
-        // ranks/outdeg are node-sized: size-conditionally broadcast them
-        // into the edge scan (post-checkpoint stats are opaque to the
-        // planner, which would otherwise fall back to sort-merge); at
-        // cluster scale where nodes outgrow the threshold the hint
-        // no-ops and the join stays hash-partitioned on src — the same
-        // conditional-broadcast discipline as every vocab join here
-        val shares = graft.operators.Hints.autoBroadcast(
-          ranks
-            .join(graft.operators.Hints.autoBroadcast(outdeg),
-              col("v") === col("src"))
-            .withColumn("share", expr("r div deg"))
-            .select(col("src"), col("share")))
+        // ranks/outdeg are node-sized: the planner broadcasts them into
+        // the edge scan while their estimates fit the session threshold
+        // (AQE converts at run time too); at cluster scale where nodes
+        // outgrow it the join stays hash-partitioned on src
+        val shares = ranks
+          .join(outdeg, col("v") === col("src"))
+          .withColumn("share", expr("r div deg"))
+          .select(col("src"), col("share"))
         val contrib = adj
           .join(shares, Seq("src"))
           .groupBy(col("dst"))
           .agg(sum(col("share")).as("contrib"))
         // r10: the rank-assembly join ran as a per-round SortMergeJoin
         // of two node-sized frames (contrib's stats are opaque behind
-        // the cached edge scan, so autoBroadcast declined) — gate the
-        // broadcast on the MEASURED node count instead (contrib has at
-        // most n rows); beyond the ceiling the join falls back unchanged
-        val contribB =
-          if (n * 32 <= graft.operators.Gates.iterBroadcastBytes(s))
-            broadcast(contrib)
-          else contrib
+        // the cached edge scan, so the planner's estimate declines) —
+        // gate the broadcast on the MEASURED node count instead (contrib
+        // has at most n rows, ~32 B each); beyond the ceiling the join
+        // falls back unchanged
+        val contribB = graft.operators.Gates.bcastIfUnder(contrib, n, 32L)
         val ranksPre = nodes
           .join(contribB, col("v") === col("dst"), "left_outer")
           .select(
@@ -2980,13 +2955,11 @@ object Olap {
     (s, d) => {
       val rev = Tables.load(s, d, "orders")
         .select(col("o_custkey"), Det.cents(col("o_totalprice")).as("c"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "customer")
-            .select(col("c_custkey"), col("c_nationkey"))),
+        .join(Tables.load(s, d, "customer")
+            .select(col("c_custkey"), col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
+        .join(Tables.load(s, d, "nation")
+            .select(col("n_nationkey"), col("n_name")),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name")).agg(sum(col("c")).as("rev_c"))
       val withTot = rev.crossJoin(broadcast(
@@ -3177,18 +3150,15 @@ object Olap {
       import graft.Caches.Tracked
       val rev = Tables.load(s, d, "orders")
         .select(col("o_custkey"), Det.cents(col("o_totalprice")).as("c0"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "customer")
-            .select(col("c_custkey"), col("c_nationkey"))),
+        .join(Tables.load(s, d, "customer")
+            .select(col("c_custkey"), col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "nation")
+        .join(Tables.load(s, d, "nation")
             .select(col("n_nationkey"), col("n_name"),
-              col("n_regionkey"))),
+              col("n_regionkey")),
           col("c_nationkey") === col("n_nationkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "region")
-            .select(col("r_regionkey"), col("r_name"))),
+        .join(Tables.load(s, d, "region")
+            .select(col("r_regionkey"), col("r_name")),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
         .agg(sum(col("c0")).as("c"))
@@ -3249,19 +3219,18 @@ object Olap {
       val unitCents = expr(
         s"${Det.centsSql("l_extendedprice")}" +
           " div CAST(l_quantity AS BIGINT)").as("unit_cents")
-      val eurSupp = graft.operators.Hints.autoBroadcast(
-        Tables.load(s, d, "supplier")
-          .join(
-            Tables.load(s, d, "nation")
-              .select(col("n_nationkey"), col("n_name"),
-                col("n_regionkey")),
-            col("s_nationkey") === col("n_nationkey"))
-          .join(
-            Tables.load(s, d, "region")
-              .filter(col("r_name") === "EUROPE")
-              .select(col("r_regionkey")),
-            col("n_regionkey") === col("r_regionkey"))
-          .select(col("s_suppkey"), col("s_name"), col("n_name")))
+      val eurSupp = Tables.load(s, d, "supplier")
+        .join(
+          Tables.load(s, d, "nation")
+            .select(col("n_nationkey"), col("n_name"),
+              col("n_regionkey")),
+          col("s_nationkey") === col("n_nationkey"))
+        .join(
+          Tables.load(s, d, "region")
+            .filter(col("r_name") === "EUROPE")
+            .select(col("r_regionkey")),
+          col("n_regionkey") === col("r_regionkey"))
+        .select(col("s_suppkey"), col("s_name"), col("n_name"))
       val ps = Tables.load(s, d, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), unitCents)
         .groupBy(col("l_partkey"), col("l_suppkey"))
@@ -3274,10 +3243,9 @@ object Olap {
         .join(minCost,
           col("l_partkey") === col("mk") &&
             col("supply_cents") === col("min_cents"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "part")
+        .join(Tables.load(s, d, "part")
             .filter(col("p_size") <= 10)
-            .select(col("p_partkey"), col("p_name"), col("p_type"))),
+            .select(col("p_partkey"), col("p_name"), col("p_type")),
           col("l_partkey") === col("p_partkey"))
         .select(
           col("p_partkey"), col("p_name"), col("p_type"),
@@ -3347,9 +3315,8 @@ object Olap {
               to_date(col("o_orderdate")).as("o_date"),
               col("o_totalprice")),
           col("l_orderkey") === col("o_orderkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "customer")
-            .select(col("c_custkey"), col("c_name"))),
+        .join(Tables.load(s, d, "customer")
+            .select(col("c_custkey"), col("c_name")),
           col("o_custkey") === col("c_custkey"))
         .select(
           col("c_name"), col("c_custkey"), col("o_orderkey"),
@@ -3406,14 +3373,12 @@ object Olap {
         .agg(count(lit(1)).as("n_excess_parts"),
           sum(col("sq")).as("excess_qty"))
       excess
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "supplier")
+        .join(Tables.load(s, d, "supplier")
             .select(col("s_suppkey"), col("s_name"),
-              col("s_nationkey"))),
+              col("s_nationkey")),
           col("l_suppkey") === col("s_suppkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
+        .join(Tables.load(s, d, "nation")
+            .select(col("n_nationkey"), col("n_name")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_name"), col("n_name"),
           col("n_excess_parts"), col("excess_qty"))
@@ -3515,10 +3480,9 @@ object Olap {
     "q221_shipping_priority",
     (s, d) => {
       val cut = "1999-01-01"
-      val cust = graft.operators.Hints.autoBroadcast(
-        Tables.load(s, d, "customer")
-          .filter(col("c_mktsegment") === "BUILDING")
-          .select(col("c_custkey")))
+      val cust = Tables.load(s, d, "customer")
+        .filter(col("c_mktsegment") === "BUILDING")
+        .select(col("c_custkey"))
       Tables.load(s, d, "orders")
         .filter(to_date(col("o_orderdate")) < lit(cut))
         .select(col("o_orderkey"), col("o_custkey"),
@@ -3633,18 +3597,15 @@ object Olap {
         graft.queries.Det.cents(col("p_retailprice")) *
           col("l_quantity").cast(LongType) * lit(80L)
       Tables.load(s, d, "lineitem")
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "part")
+        .join(Tables.load(s, d, "part")
             .filter(col("p_name").like("%widget%"))
-            .select(col("p_partkey"), col("p_retailprice"))),
+            .select(col("p_partkey"), col("p_retailprice")),
           col("l_partkey") === col("p_partkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
+        .join(Tables.load(s, d, "supplier")
+            .select(col("s_suppkey"), col("s_nationkey")),
           col("l_suppkey") === col("s_suppkey"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
+        .join(Tables.load(s, d, "nation")
+            .select(col("n_nationkey"), col("n_name")),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"),
           year(to_date(col("l_shipdate"))).as("yr"))
@@ -3719,9 +3680,8 @@ object Olap {
       rev
         .crossJoin(broadcast(rev.agg(max(col("rev_u")).as("max_u"))))
         .filter(col("rev_u") === col("max_u"))
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "supplier")
-            .select(col("s_suppkey"), col("s_name"))),
+        .join(Tables.load(s, d, "supplier")
+            .select(col("s_suppkey"), col("s_name")),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
           (col("rev_u").cast(DoubleType) / lit(10000.0D))
@@ -3759,11 +3719,10 @@ object Olap {
         .select(col("l_partkey"), col("l_suppkey")).distinct()
         .join(excluded, col("l_suppkey") === col("xkey"), "left_anti")
       pairs
-        .join(graft.operators.Hints.autoBroadcast(
-          Tables.load(s, d, "part")
+        .join(Tables.load(s, d, "part")
             .filter(col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29))
             .select(col("p_partkey"), col("p_brand"), col("p_type"),
-              col("p_size"))),
+              col("p_size")),
           col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), col("p_type"), col("p_size"))
         .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
@@ -3866,8 +3825,8 @@ object Olap {
       var dist = Seq((source, 0L)).toDF("part_key", "cost")
         .localCheckpoint()
       // node-sized dist broadcast under the measured-count gate (r10 —
-      // the q192 rationale: estimate-based hints fall back to per-round
-      // edge shuffles at the 50× sweep)
+      // the q192 rationale: estimates over a checkpointed frame fall
+      // back to per-round edge shuffles at 50× scale)
       var distCnt = 1L
       for (_ <- 1 to 3) {
         // dist count observed during the checkpoint job (r10, §2.4)
@@ -4018,8 +3977,7 @@ object Olap {
       val tri = adjHi
         .select(col("a").as("ta"), col("nbrs").as("na"),
           explode(col("nbrs")).as("tb"))
-        .join(graft.operators.Hints.autoBroadcast(
-          adjHi.select(col("a").as("tb"), col("nbrs").as("nb"))),
+        .join(adjHi.select(col("a").as("tb"), col("nbrs").as("nb")),
           Seq("tb"))
         .select(col("ta"), col("tb"),
           explode(array_intersect(col("na"), col("nb"))).as("tc"))
@@ -4111,11 +4069,9 @@ object Olap {
         .join(e, Seq("a", "b"), "left_anti")
       val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       cand
-        .join(graft.operators.Hints.autoBroadcast(
-          deg.select(col("src").as("a"), col("deg").as("deg_a"))),
+        .join(deg.select(col("src").as("a"), col("deg").as("deg_a")),
           Seq("a"))
-        .join(graft.operators.Hints.autoBroadcast(
-          deg.select(col("src").as("b"), col("deg").as("deg_b"))),
+        .join(deg.select(col("src").as("b"), col("deg").as("deg_b")),
           Seq("b"))
         .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"),
           col("cn").cast(DoubleType)
@@ -4342,8 +4298,8 @@ object Olap {
       // guide §2.4/§3.1): hashpartitioning(src) satisfies both the
       // (src, lbl) vote groupBy and the per-src top-1 window, so with
       // the label side broadcast each round runs with ZERO exchanges
-      // over the edge set; at corpus scale the size-conditional hint
-      // no-ops and the round falls back to the shuffled shape
+      // over the edge set; at corpus scale the measured-count gate
+      // declines and the round falls back to the shuffled shape
       val adj = copurchaseAdj(s, d, partitionKey = Some("src"))
       // node count is constant across rounds — measured-count broadcast
       // gate, observed during the initial checkpoint job (r10)
@@ -4468,14 +4424,13 @@ object Olap {
   val q294 = Q(
     "q294_capped_rollup",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       import org.apache.spark.sql.expressions.Window
       val perPart = Tables.load(s, d, "lineitem")
-        .join(autoBroadcast(Tables.load(s, d, "supplier")),
+        .join(Tables.load(s, d, "supplier"),
           col("l_suppkey") === col("s_suppkey"))
-        .join(autoBroadcast(Tables.load(s, d, "nation")),
+        .join(Tables.load(s, d, "nation"),
           col("s_nationkey") === col("n_nationkey"))
-        .join(autoBroadcast(Tables.load(s, d, "part")),
+        .join(Tables.load(s, d, "part"),
           col("l_partkey") === col("p_partkey"))
         .groupBy(col("n_name"), col("p_name"))
         .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
@@ -4536,11 +4491,10 @@ object Olap {
   val q295 = Q(
     "q295_clustering_depth",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       val keys = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"))
       val bounds = keys.agg(max(col("k")).as("mx")).select(col("mx"))
-      val assigned = keys.crossJoin(autoBroadcast(bounds)).select(
+      val assigned = keys.crossJoin(bounds).select(
         col("k"),
         expr("instr('0123456789abcdef', " +
           "substring(md5(CAST(k AS STRING)), 32, 1)) % 8").as("hash_file"),
@@ -4556,8 +4510,7 @@ object Olap {
       val st = stats("hash", "hash_file")
         .unionByName(stats("range", "range_file")).persistTracked()
       st.as("a")
-        .join(autoBroadcast(st.as("b")),
-          col("a.layout") === col("b.layout") &&
+        .join(st.as("b"), col("a.layout") === col("b.layout") &&
             col("a.kmin") <= col("b.kmax") &&
             col("b.kmin") <= col("a.kmax"))
         .groupBy(col("a.layout").as("layout"),
@@ -4640,13 +4593,12 @@ object Olap {
     "q296_curve_locality",
     (s, d) => {
       import s.implicits._
-      import graft.operators.Hints.autoBroadcast
       import graft.Caches.Tracked
       val curves = CurveCells.toDF("cx", "cy", "curve", "cell")
       val li = Tables.load(s, d, "lineitem")
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
       val bounds = li.agg(max(col("p")).as("mp"), max(col("sk")).as("ms"))
-      val cellRows = li.crossJoin(autoBroadcast(bounds))
+      val cellRows = li.crossJoin(bounds)
         .select(
           least(expr("(p - 1) * 8 div mp"), lit(7L)).cast(IntegerType)
             .as("cx"),
@@ -4656,22 +4608,21 @@ object Olap {
         .agg(count(lit(1)).as("n_rows"))
       val boxes = (for (bx <- 0 to 6; by <- 0 to 6)
         yield (bx, by)).toDF("bx", "by")
-      val cover = boxes.join(autoBroadcast(curves),
+      val cover = boxes.join(curves,
         col("cx").between(col("bx"), col("bx") + 1) &&
           col("cy").between(col("by"), col("by") + 1))
-        .join(autoBroadcast(cellRows), Seq("cx", "cy"), "left")
+        .join(cellRows, Seq("cx", "cy"), "left")
         .na.fill(0L, Seq("n_rows"))
         .persistTracked()
       val adj = cover.as("a")
-        .join(autoBroadcast(cover.as("b")),
-          col("a.curve") === col("b.curve") &&
+        .join(cover.as("b"), col("a.curve") === col("b.curve") &&
             col("a.bx") === col("b.bx") && col("a.by") === col("b.by") &&
             col("b.cell") === col("a.cell") + 1)
         .groupBy(col("a.curve").as("curve"))
         .agg(count(lit(1)).as("n_adjacent"))
       cover.groupBy(col("curve"))
         .agg(count(lit(1)).as("n_cells"), sum(col("n_rows")).as("rows_read"))
-        .join(autoBroadcast(adj), Seq("curve"))
+        .join(adj, Seq("curve"))
         .select(col("curve"),
           (col("n_cells") - col("n_adjacent")).as("total_runs"),
           ((col("n_cells") - col("n_adjacent")).cast(DoubleType) /
@@ -6744,18 +6695,17 @@ object Olap {
       // The ~40 MB nb side is broadcast under an EXPLICIT measured
       // gate: bytes are modeled from the exactly-known element count
       // (2|E| ids × 16 B unsafe-array slot + per-row overhead) against
-      // the shared iteration-broadcast ceiling (Gates, default 128 MB —
+      // the shared iteration-broadcast ceiling (Gates, 128 MB —
       // guide §3.1: "a few hundred MB is usually fine"). Beyond the
       // gate the join falls back to the shuffled shape unchanged — the
       // same discipline as Components' materialized-count gate,
       // replacing r9's optimizer-estimate gate, which under a
       // cached-join input would mis-estimate in BOTH directions.
-      val adjBcastMax = graft.operators.Gates.iterBroadcastBytes(s)
       def support(adj: DataFrame, nEdges: Long, nVerts: Long): DataFrame = {
-        val nbSide = adj.select(col("v").as("b"), col("nbrs").as("nb"))
-        val nb =
-          if (2 * nEdges * 16 + nVerts * 32 <= adjBcastMax) broadcast(nbSide)
-          else nbSide
+        // 2|E| × 16 B + |V| × 32 B = (|E| + |V|) × 32 B
+        val nb = graft.operators.Gates.bcastIfUnder(
+          adj.select(col("v").as("b"), col("nbrs").as("nb")),
+          nEdges + nVerts, 32L)
         adj.select(col("v").as("a"), col("nbrs").as("na"),
             explode(col("nbrs")).as("b"))
           .filter(col("a") < col("b"))
@@ -6802,8 +6752,7 @@ object Olap {
           .unionAll(dead.select(col("b").as("v"), col("a").as("w")))
           .groupBy(col("v"))
           .agg(expr("sort_array(collect_list(w))").as("dw"))
-        val deadN =
-          if (2 * deadCnt * 16 <= adjBcastMax) broadcast(deadN0) else deadN0
+        val deadN = graft.operators.Gates.bcastIfUnder(deadN0, 2 * deadCnt, 16L)
         // adjacency of the survivor graph: previous arrays minus dead
         // neighbors (array_except keeps first-array order ⇒ stays
         // sorted); vertices with no surviving edge drop out, so the

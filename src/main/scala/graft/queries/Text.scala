@@ -716,11 +716,9 @@ object Text {
         .filter(col("cb") >= 5)
       bcnt
         .join(
-          graft.operators.Hints.autoBroadcast(
-            ucnt.select(col("w").as("w1"), col("cw").as("cw1"))), Seq("w1"))
+          ucnt.select(col("w").as("w1"), col("cw").as("cw1")), Seq("w1"))
         .join(
-          graft.operators.Hints.autoBroadcast(
-            ucnt.select(col("w").as("w2"), col("cw").as("cw2"))), Seq("w2"))
+          ucnt.select(col("w").as("w2"), col("cw").as("cw2")), Seq("w2"))
         .crossJoin(broadcast(tot))
         .withColumn(
           "lift",
@@ -931,7 +929,7 @@ object Text {
         .persistTracked()
       val model = tf.select(col("w")).distinct()
         .withColumn("wc", expr(weightCents("w")).cast(LongType))
-      tf.join(graft.operators.Hints.autoBroadcast(model), Seq("w"))
+      tf.join(model, Seq("w"))
         .groupBy(col("doc_id"))
         .agg(
           sum(col("tf")).cast(LongType).as("n_tokens"),
@@ -1892,7 +1890,7 @@ object Text {
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
       words
-        .join(graft.operators.Hints.autoBroadcast(enc), Seq("w"))
+        .join(enc, Seq("w"))
         .groupBy(col("doc_id"))
         .agg(
           count(lit(1)).as("ws_tokens"),
@@ -1926,7 +1924,6 @@ object Text {
   val q95 = Q(
     "q95_lm_bigram_score",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       val toks = Tables.load(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .persistTracked()
@@ -1944,8 +1941,8 @@ object Text {
       val c2 = bigrams.groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("c2"))
       bigrams
-        .join(autoBroadcast(c2), Seq("w1", "w2"))
-        .join(autoBroadcast(c1), Seq("w1"))
+        .join(c2, Seq("w1", "w2"))
+        .join(c1, Seq("w1"))
         .withColumn(
           "p", col("c2").cast(DoubleType) / col("c1").cast(DoubleType))
         .groupBy(col("doc_id"))
@@ -2140,8 +2137,7 @@ object Text {
         .orderBy(col("cnt").desc, col("w")).limit(20)
         .select(col("w"), lit(1).as("in_vocab"))
       toks
-        .join(graft.operators.Hints.autoBroadcast(vocab),
-          Seq("w"), "left_outer")
+        .join(vocab, Seq("w"), "left_outer")
         .groupBy(col("source"))
         .agg(
           count(lit(1)).as("n_tokens"),
@@ -2300,7 +2296,6 @@ object Text {
   val q114 = Q(
     "q114_chisq",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       val cells = Tables.load(s, d, "documents")
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("obs"))
@@ -2309,8 +2304,8 @@ object Text {
       val ct = cells.groupBy(col("source")).agg(sum(col("obs")).as("ct"))
       val n = cells.agg(sum(col("obs")).as("n"))
       cells
-        .join(autoBroadcast(rt), Seq("lang"))
-        .join(autoBroadcast(ct), Seq("source"))
+        .join(rt, Seq("lang"))
+        .join(ct, Seq("source"))
         .crossJoin(broadcast(n))
         .withColumn(
           "exp", col("rt").cast(DoubleType) * col("ct") / col("n"))
@@ -2375,7 +2370,6 @@ object Text {
     "q115_winsorize",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      import graft.operators.Hints.autoBroadcast
       val docs = Tables.load(s, d, "documents")
         .select(col("lang"), col("doc_id"), col("n_chars"))
       val w = Window.partitionBy(col("lang"))
@@ -2385,7 +2379,7 @@ object Text {
       val counts = ranked.groupBy(col("lang"))
         .agg(max(col("rn")).cast(LongType).as("n"))
       val bounds = ranked
-        .join(autoBroadcast(counts), Seq("lang"))
+        .join(counts, Seq("lang"))
         // ceil(n*q) in PURE INTEGER form — (n*k + 99) div 100. A double
         // n*0.05 differs from DuckDB's exact-DECIMAL 0.05 at exact
         // multiples (0.05 is not a binary fraction), flipping the ceil
@@ -2400,7 +2394,7 @@ object Text {
           min(when(col("rn") === col("hi_pos"), col("n_chars"))).as("hi"))
       ranked // cached — a fresh docs scan would re-read the parquet
         .select(col("lang"), col("n_chars"))
-        .join(autoBroadcast(bounds), Seq("lang"))
+        .join(bounds, Seq("lang"))
         .withColumn(
           "clamped", greatest(col("lo"), least(col("hi"), col("n_chars"))))
         .groupBy(col("lang"))
@@ -2648,7 +2642,7 @@ object Text {
         .select(
           col("tok"), col("exact_cnt"), explode(expr(dArr)).as("d"))
         .withColumn("b", expr(bucketExpr))
-      probes.join(graft.operators.Hints.autoBroadcast(merged), Seq("d", "b"))
+      probes.join(merged, Seq("d", "b"))
         .groupBy(col("tok"), col("exact_cnt"))
         .agg(min(col("cnt")).as("cms_est"))
         .orderBy(col("exact_cnt").desc, col("tok"))
@@ -2713,9 +2707,8 @@ object Text {
       dl: org.apache.spark.sql.DataFrame,
       totals: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import graft.operators.Hints.autoBroadcast
     val scored = tf
-      .join(autoBroadcast(df), Seq("w"))
+      .join(df, Seq("w"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(totals))
       .withColumn("idf",
@@ -2741,7 +2734,6 @@ object Text {
   val q184 = Q(
     "q184_bm25",
     (s, d) => {
-      import graft.operators.Hints.autoBroadcast
       import graft.Caches.Tracked
       val tok = Tables.load(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -2990,7 +2982,7 @@ object Text {
       Tables.load(s, d, "documents")
         .select(col("lang"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
-        .join(graft.operators.Hints.autoBroadcast(enc), Seq("w"))
+        .join(enc, Seq("w"))
         .groupBy(col("lang"))
         .agg(
           count(lit(1)).as("n_words"),
@@ -4339,7 +4331,7 @@ object Text {
       val model = tf.select(col("w")).distinct()
         .withColumn("wc", expr(weightCents("w")).cast(LongType))
       val scored = tf
-        .join(graft.operators.Hints.autoBroadcast(model), Seq("w"))
+        .join(model, Seq("w"))
         .groupBy(col("doc_id"))
         .agg(
           sum(col("tf")).cast(LongType).as("n_tokens"),
@@ -4479,7 +4471,7 @@ object Text {
         .select(col("w"), col("qw"), col("dp"))
       val docToks = raw.distinct()
       docToks
-        .join(graft.operators.Hints.autoBroadcast(wDots), Seq("w"))
+        .join(wDots, Seq("w"))
         .groupBy(col("doc_id"), col("qw"))
         .agg(max(col("dp")).as("best"))
         .groupBy(col("doc_id"))
@@ -6414,8 +6406,8 @@ object Text {
       val cont = bg.groupBy(col("w2"))
         .agg(count(lit(1)).as("n1p_back"))
       val t = bg.agg(count(lit(1)).as("t_types"))
-      bg.join(graft.operators.Hints.autoBroadcast(ctx), Seq("w1"))
-        .join(graft.operators.Hints.autoBroadcast(cont), Seq("w2"))
+      bg.join(ctx, Seq("w1"))
+        .join(cont, Seq("w2"))
         .crossJoin(broadcast(t))
         .select(col("w1"), col("w2"), col("c12"), col("c1"),
           col("n1p_fwd"), col("n1p_back"), col("t_types"),

@@ -594,12 +594,12 @@ object EventStream {
         .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
         .persistTracked()
       val s2 = ev.filter(col("event_type") === "click")
-        .join(graft.operators.Hints.autoBroadcast(s1), Seq("user_id"))
+        .join(s1, Seq("user_id"))
         .filter(col("ts") > col("t1"))
         .groupBy(col("user_id")).agg(min(col("ts")).as("t2"))
         .persistTracked()
       val s3 = ev.filter(col("event_type") === "purchase")
-        .join(graft.operators.Hints.autoBroadcast(s2), Seq("user_id"))
+        .join(s2, Seq("user_id"))
         .filter(col("ts") > col("t2"))
         .groupBy(col("user_id")).agg(min(col("ts")).as("t3"))
       s1.agg(count(lit(1)).as("n_users"))
@@ -652,7 +652,7 @@ object EventStream {
       val anchors = ev.groupBy(col("user_id"))
         .agg(min(col("day")).as("day0"))
       val epoch = anchors.agg(min(col("day0")).as("epoch"))
-      ev.join(graft.operators.Hints.autoBroadcast(anchors), Seq("user_id"))
+      ev.join(anchors, Seq("user_id"))
         .crossJoin(broadcast(epoch))
         .select(
           col("user_id"),
@@ -1662,7 +1662,7 @@ object EventStream {
         .groupBy(expr("datediff(day0, epoch) div 7").as("cohort_week"))
         .agg(count(lit(1)).as("cohort_n"))
       val weekly = ev.filter(col("event_type") === "purchase")
-        .join(graft.operators.Hints.autoBroadcast(anchors), Seq("user_id"))
+        .join(anchors, Seq("user_id"))
         .crossJoin(broadcast(epoch))
         .groupBy(
           expr("datediff(day0, epoch) div 7").as("cohort_week"),
@@ -1968,7 +1968,6 @@ object EventStream {
     "q150_conversion_latency",
     (s, d) => {
       import org.apache.spark.sql.types.{DoubleType, LongType}
-      import graft.operators.Hints.autoBroadcast
       import graft.Caches.Tracked
       val ev = Tables.load(s, d, "events")
         .select(col("user_id"), col("event_type"),
@@ -1978,8 +1977,8 @@ object EventStream {
           min(when(col("event_type") === "view", col("us"))).as("v0"),
           count(lit(1)).as("n_ev"))
       val firstBuyAfter = ev.filter(col("event_type") === "purchase")
-        .join(autoBroadcast(anchors.filter(col("v0").isNotNull)
-          .select(col("user_id"), col("v0"))), Seq("user_id"))
+        .join(anchors.filter(col("v0").isNotNull)
+          .select(col("user_id"), col("v0")), Seq("user_id"))
         .filter(col("us") >= col("v0"))
         .groupBy(col("user_id"))
         .agg(min(col("us")).as("p0"), min(col("v0")).as("v0"))

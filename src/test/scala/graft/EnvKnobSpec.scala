@@ -3,23 +3,38 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine's environment surface is deliberate: a new `SPARK_GRAFT_*`
-  * read in `src/main/scala` fails here until it is added below. */
+/** The engine's environment and config surface is deliberate: a new
+  * `SPARK_GRAFT_*` env var or `spark.graft.*` session key read in
+  * `src/main/scala` fails here until it is added below. */
 class EnvKnobSpec extends AnyFunSuite {
 
-  private val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_LOOP_PLANS")
+  private val allowedEnv = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_LOOP_PLANS")
+
+  /** The flag-gated optimizer rules' switches and the summary rewrite's
+    * path/fact; every other tunable is a constant in code. */
+  private val allowedConf = Set(
+    "spark.graft.approxDistinct.enabled",
+    "spark.graft.approxPercentile.enabled",
+    "spark.graft.summaryRewrite.enabled",
+    "spark.graft.summaryRewrite.path",
+    "spark.graft.summaryRewrite.fact")
 
   /** Quoted `"SPARK_GRAFT_…"` literals on code lines (comment lines are
     * skipped): main code spells such a name only to read it, from
     * `sys.env`/`getenv` or, as in [[Sessions.defaultCpus]], from a map
     * that defaults to `sys.env`. A bare `"SPARK_GRAFT_"` prefix is kept
     * as-is, so a name built at run time fails the check too. */
-  private val literal = "\"(SPARK_GRAFT_[A-Z0-9_]*)\"".r
+  private val envLiteral = "\"(SPARK_GRAFT_[A-Z0-9_]*)\"".r
 
-  test("src/main reads exactly the allowed SPARK_GRAFT_* env vars") {
+  /** Quoted `"spark.graft.…"` literals on code lines, likewise: a key
+    * is spelled once, as the constant its reader passes to the conf. */
+  private val confLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)\"".r
+
+  private def literalsInMain(literal: Regex): Set[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
     val files = Files.walk(root).iterator.asScala
@@ -31,8 +46,18 @@ class EnvKnobSpec extends AnyFunSuite {
       }
       code.flatMap(l => literal.findAllMatchIn(l).map(_.group(1))).toSeq
     }
-    val found = files.flatMap(reads).toSet
-    assert(found == allowed,
-      s"added: ${found -- allowed}; gone: ${allowed -- found}")
+    files.flatMap(reads).toSet
+  }
+
+  test("src/main reads exactly the allowed SPARK_GRAFT_* env vars") {
+    val found = literalsInMain(envLiteral)
+    assert(found == allowedEnv,
+      s"added: ${found -- allowedEnv}; gone: ${allowedEnv -- found}")
+  }
+
+  test("src/main reads exactly the allowed spark.graft.* session keys") {
+    val found = literalsInMain(confLiteral)
+    assert(found == allowedConf,
+      s"added: ${found -- allowedConf}; gone: ${allowedConf -- found}")
   }
 }

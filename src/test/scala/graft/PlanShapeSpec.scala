@@ -497,4 +497,28 @@ class PlanShapeSpec extends SparkSpec {
       s"the hubCap=${graft.queries.Olap.hubCap} slice bound " +
         "disappeared from the plan")
   }
+
+  test("q179 dimension joins broadcast under the session threshold only") {
+    // q179's four dimension joins (customer, supplier, both nation
+    // roles) carry no hint: the planner broadcasts them while their
+    // estimates fit spark.sql.autoBroadcastJoinThreshold, and -1 must
+    // turn every broadcast off, AQE's runtime conversion included
+    import org.apache.spark.QueryPlans
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def broadcasts(): Int = {
+      val df = SparkEntry.queries("q179_nation_volume")(spark, sf001)
+      try df.collect()
+      finally Caches.release()
+      QueryPlans.nodes(df.queryExecution.executedPlan)
+        .count(_.isInstanceOf[BroadcastHashJoinExec])
+    }
+    val atDefault = broadcasts()
+    assert(atDefault >= 4,
+      s"expected >=4 broadcast joins at the default threshold, saw $atDefault")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try assert(broadcasts() == 0, "broadcast joins planned at threshold -1")
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
