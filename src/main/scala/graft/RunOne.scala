@@ -4,6 +4,8 @@ package graft
   * print, per run, the rows its `collect()` returned and the wall time —
   * timed the way `e2ebench` times an op, so the plan measured is the plan
   * users run (a `.count()` lets Catalyst prune aggregates and sorts).
+  * Each run releases what it cached and checkpointed (`Caches.release`)
+  * inside its timing, as `e2ebench` does after every op.
   * Verify (all queries, oracle dump) is too coarse for per-query work.
   * Usage: runMain graft.RunOne <name> [sfDir] [runs]. */
 object RunOne {
@@ -32,9 +34,6 @@ object RunOne {
         finally Caches.release()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[runone] $name run $i: $n rows collected, $dt%.2f s")
-      // free localCheckpoint blocks between runs — BLOCKING, so no run
-      // races the async free of its predecessor's blocks
-      Caches.sweepOrphans(spark, blocking = true)
     }
     spark.stop()
   }

@@ -8,8 +8,9 @@ object Verify {
     * result's schema, as one parquet file under `outDir/name`. The oracle
     * thereby checks the rows of the plan `collect()` runs — the one users,
     * specs and `e2ebench` run — not a plan re-shaped by a write. Releases
-    * the query's cached frames; construction and action share the calling
-    * thread, so the thread-local ledger holds exactly this query's. */
+    * the query's cached frames and checkpoints; construction and action
+    * share the calling thread, so the thread-local ledger holds exactly
+    * this query's. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       name: String): Unit =
     try {

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Caches
+import graft.Caches.Tracked
+
 /** Distributed connected components by min-label propagation with pointer
   * halving — the clustering step that turns near-dup PAIR lists into
   * dedup groups (q68), usable for any undirected graph expressed as
@@ -13,26 +16,16 @@ import org.apache.spark.sql.functions._
   * MapReduce and Beyond"). Driver state is one convergence counter per
   * round, never the graph.
   *
-  * Every round localCheckpoints its labels: iterative plans must TRUNCATE
+  * Every round checkpoints its labels: iterative plans must TRUNCATE
   * lineage, not just cache it — each round's plan embeds the previous
   * round's twice (the halving self-join), so with persist alone catalyst
   * re-analyzes a plan that doubles per round (this cost q68 190 s at
-  * sf0.1 before the fix; 8 s after). On a cluster, reliable checkpoints
-  * would replace localCheckpoint for fault tolerance; same algorithm.
+  * sf0.1 before the fix; 8 s after). The checkpoints are ledgered
+  * (`checkpointTracked`), and each round frees its dead predecessors
+  * with [[graft.Caches.free]]. On a cluster, reliable checkpoints would
+  * replace local ones for fault tolerance; same algorithm.
   */
 object Components {
-
-  /** Unpersist the RDD blocks behind a `localCheckpoint()`ed frame.
-    * A checkpointed Dataset's plan is a single LogicalRDD over the
-    * persisted internal RDD; [[graft.Caches.release]] cannot see these
-    * (they are not ledgered DataFrames), so iterative operators free
-    * dead rounds explicitly. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Labels every node with the MINIMUM node id of its connected
     * component — the unique fixpoint, independent of round count or
@@ -58,7 +51,7 @@ object Components {
     val edges = p0
       .union(p0.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("dst"))
-      .localCheckpoint()
+      .checkpointTracked()
     // convergence via the label-sum potential: labels only ever decrease,
     // so Σ lbl (exact DECIMAL(38,0) — no Long overflow, no FP) strictly
     // decreases iff any label changed. The sum (and the node count the
@@ -79,7 +72,7 @@ object Components {
     var labels = nodes.toDF("id")
       .select(col("id"), col("id").as("lbl"))
       .observe(obs0, sumCol, count(lit(1)).as("n"))
-      .localCheckpoint()
+      .checkpointTracked()
     var prevSum = obsSum(obs0)
     // label frames are node-sized: broadcast them into the static edge
     // scan when they actually fit (r9, guide §3.1) — a round then runs
@@ -112,15 +105,13 @@ object Components {
       // two join sides shuffle on DIFFERENT keys (lbl vs mid), so no
       // exchange reuse applies and a lazy plan would run the whole
       // edge-sized nbrMin pipeline twice per round
-      val steppedPre = labels
+      val stepped = labels
         .join(maybeBcast(nbrMin.withColumnRenamed("dst", "id")),
           Seq("id"), "left")
         .select(
           col("id"),
           least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
-      if (rounds == 0)
-        graft.plans.LoopPlans.dump(s"${tag}_cc_step_round1", steppedPre)
-      val stepped = steppedPre.localCheckpoint()
+        .checkpointTracked()
       // pointer halving: follow my label to ITS label (labels only ever
       // decrease, so label(label(id)) <= label(id))
       val lblMap =
@@ -137,7 +128,7 @@ object Components {
           col("id"),
           least(col("lbl"), coalesce(col("mlbl"), col("lbl"))).as("lbl"))
         .observe(obsR, sumCol)
-        .localCheckpoint()
+        .checkpointTracked()
       val newSum = obsSum(obsR)
       // jumped is materialized (the sum probe ran): the previous
       // round's labels and this round's stepped checkpoint blocks are
@@ -146,8 +137,8 @@ object Components {
       // own lineage is truncated at its checkpoint, so freeing its
       // inputs can never make it unrecomputable-wrong, only (on cache
       // eviction) slower.
-      freeCheckpoint(labels)
-      freeCheckpoint(stepped)
+      Caches.free(labels)
+      Caches.free(stepped)
       changed = newSum.compareTo(prevSum) != 0
       prevSum = newSum
       labels = jumped

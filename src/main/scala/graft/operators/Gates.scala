@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Caches.Tracked
+
 /** Shared size ceiling for MEASURED broadcast decisions inside
   * iterative operators (connected components' per-round label frames,
   * k-truss's per-peel adjacency). Every other join is left to Spark's
@@ -34,18 +36,18 @@ object Gates {
 
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** localCheckpoint with the row count OBSERVED during the checkpoint's
-    * own materialization job (r10, guide §1.2/§2.4 — don't run a second
-    * pass for a number the materializing job already saw): the exact
-    * count that gates the next round's broadcast otherwise costs one
-    * extra scan job per iteration round. Returns the checkpointed frame
-    * and its count. */
+  /** A ledgered checkpoint (`checkpointTracked`) with the row count
+    * OBSERVED during the checkpoint's own materialization job (r10,
+    * guide §1.2/§2.4 — don't run a second pass for a number the
+    * materializing job already saw): the exact count that gates the next
+    * round's broadcast otherwise costs one extra scan job per iteration
+    * round. Returns the checkpointed frame and its count. */
   def checkpointCounted(df: org.apache.spark.sql.DataFrame, tag: String)
       : (org.apache.spark.sql.DataFrame, Long) = {
     import org.apache.spark.sql.functions.{count, lit}
     val obs = new org.apache.spark.sql.Observation(
       s"${tag}_${obsSeq.incrementAndGet()}")
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    val ck = df.observe(obs, count(lit(1)).as("n")).checkpointTracked()
     (ck, obs.get("n") match { case n: Long => n; case _ => 0L })
   }
 }

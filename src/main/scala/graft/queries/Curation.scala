@@ -2467,7 +2467,7 @@ object Curation {
           // (marginal + join), so an uncheckpointed chain re-executes
           // the whole history 2^rounds times (measured: 27 s warm at
           // sf0.1 for a 100-row table; 0.9 s after)
-          .localCheckpoint()
+          .checkpointTracked()
       }
       val finalRow = w.groupBy(col("lang"))
         .agg(expr("aggregate(array_sort(collect_list(struct(source, w))), " +

@@ -870,7 +870,7 @@ object Dedup {
     // union branch
     val pairs = jaccardPairs(docs, 0.6)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
+      .checkpointTracked()
     graft.operators.Components.connectedComponents(
       docs.select(col("doc_id").as("id")), pairs, tag = tag)
   }
@@ -1287,7 +1287,7 @@ object Dedup {
     // Checkpointed: the two family readers must not re-run the verify.
     val pairs = verifyJaccard(pairsFromEvents(events, t), enc, enc, t)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
+      .checkpointTracked()
     (pairs.filter(col("doc_b") <= cut), pairs.filter(col("doc_b") > cut))
   }
 
@@ -1329,9 +1329,9 @@ object Dedup {
       .select(col("doc_a"), col("b_rep").as("doc_b"))
     val merged = graft.operators.Components.connectedComponents(
       reps.unionByName(fresh.select(col("doc_id").as("id"))),
-      crossC.unionByName(newNew).localCheckpoint(),
+      crossC.unionByName(newNew).checkpointTracked(),
       tag = tag)
-      .localCheckpoint()
+      .checkpointTracked()
     // old nodes inherit their representative's merged label; fresh ids
     // (> cut by the split construction) read theirs directly
     state
@@ -1368,7 +1368,7 @@ object Dedup {
       // where the earlier r10 shape ran one per family
       val pairs = jaccardPairs(all0, 0.6)
         .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
+        .checkpointTracked()
       val oldOld = pairs.filter(col("doc_b") <= cut)
       val cross = pairs
         .filter(col("doc_a") <= cut && col("doc_b") > cut)
@@ -1466,7 +1466,7 @@ object Dedup {
         graft.operators.Components.connectedComponents(
           old.select(col("doc_id").as("id")),
           jaccardPairs(old, 0.6).select(col("doc_a"), col("doc_b"))
-            .localCheckpoint(),
+            .checkpointTracked(),
           tag = "q238_state")
           .write.format("graft.sources.tsv")
           .mode("overwrite").save(dir.toString)

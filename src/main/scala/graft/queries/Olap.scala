@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.Caches.Tracked
 
 /** Standard OLAP surface beyond the reference's declared operators
   * (SURVEY §2.5 marks ranking/frames "available when needed", §2.4 marks
@@ -797,7 +798,6 @@ object Olap {
   val q133 = Q(
     "q133_mad_outliers",
     (s, d) => {
-      import graft.Caches.Tracked
       val ev = Tables.load(s, d, "events")
         .select(
           col("event_type"), col("event_id"),
@@ -1046,7 +1046,6 @@ object Olap {
   val q144 = Q(
     "q144_basket_affinity",
     (s, d) => {
-      import graft.Caches.Tracked
       val op = Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
         .persistTracked()
@@ -1221,7 +1220,6 @@ object Olap {
   val q147 = Q(
     "q147_shipping_delay",
     (s, d) => {
-      import graft.Caches.Tracked
       // r9 (guide §2.3 — shuffle fewer bytes): the exact ceil-rank
       // percentile VALUE depends only on the per-priority delay
       // SPECTRUM (the row at rank r carries the smallest delay whose
@@ -1653,7 +1651,6 @@ object Olap {
   val q172 = Q(
     "q172_blame_supplier",
     (s, d) => {
-      import graft.Caches.Tracked
       val o = Tables.load(s, d, "orders")
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od"))
       val l = Tables.load(s, d, "lineitem")
@@ -2064,7 +2061,6 @@ object Olap {
   val q167 = Q(
     "q167_triangle_count",
     (s, d) => {
-      import graft.Caches.Tracked
       // r9: no distinct/persist on the fact projection — collect_set
       // dedups per basket and the frame has a single consumer
       val op = Tables.load(s, d, "lineitem")
@@ -2389,7 +2385,6 @@ object Olap {
   val q181 = Q(
     "q181_rfm_segments",
     (s, d) => {
-      import graft.Caches.Tracked
       val per = Tables.load(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate")).as("last_d"),
@@ -2721,7 +2716,6 @@ object Olap {
       // groupBy runs exchange-free (the rank/label side is node-sized
       // and broadcast-joined in)
       partitionKey: Option[String] = None): DataFrame = {
-    import graft.Caches.Tracked
     val und = copurchasePairs(s, d).select(col("a"), col("b"))
     val adj = und.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
@@ -2753,7 +2747,6 @@ object Olap {
     * convention that turns co-occurrence counts into path costs. */
   private def copurchaseAdjW(
       s: SparkSession, d: String): DataFrame = {
-    import graft.Caches.Tracked
     val und = copurchasePairs(s, d)
       .withColumn("w", greatest(lit(1L), lit(10L) - col("n_ab")))
     und.select(col("a").as("src"), col("b").as("dst"), col("w"))
@@ -2789,11 +2782,10 @@ object Olap {
     "q192_bfs_levels",
     (s, d) => {
       import s.implicits._
-      import graft.Caches.Tracked
       val adj = copurchaseAdj(s, d)
       val source = adj.agg(min(col("src"))).first().getLong(0)
       var levels = Seq((source, 0))
-        .toDF("part_key", "bfs_level").localCheckpoint()
+        .toDF("part_key", "bfs_level").checkpointTracked()
       var frontier = levels
       // frontier/visited sets are node-sized: broadcast them into the
       // cached edge scan (guide §3.1) under the MEASURED-count gate
@@ -2811,14 +2803,13 @@ object Olap {
           .join(bcastIfUnder(levels.select(col("part_key")), levelsCnt),
             Seq("part_key"), "left_anti")
           .withColumn("bfs_level", lit(l))
-        if (l == 2) graft.plans.LoopPlans.dump("q192_frontier_round2", nextPre)
         // frontier count observed during the checkpoint job itself
         // (r10, guide §2.4) — no per-round cached-scan count job
         val (next, cnt) =
           graft.operators.Gates.checkpointCounted(nextPre, "q192")
         frontierCnt = cnt
         levelsCnt += frontierCnt
-        levels = levels.unionAll(next).localCheckpoint()
+        levels = levels.unionAll(next).checkpointTracked()
         frontier = next
       }
       levels.orderBy(col("part_key"))
@@ -2853,7 +2844,6 @@ object Olap {
   val q204 = Q(
     "q204_pagerank_fixedpoint",
     (s, d) => {
-      import graft.Caches.Tracked
       // dst-partitioned: each round's contrib groupBy(dst) reuses the
       // cached layout with no exchange (shares is broadcast into it)
       val adj = copurchaseAdj(s, d, partitionKey = Some("dst"))
@@ -2863,7 +2853,7 @@ object Olap {
       val n = nodes.count()
       val scale = 1000000000000L
       val base = (15L * (scale / n)) / 100L
-      var ranks = nodes.withColumn("r", lit(scale / n)).localCheckpoint()
+      var ranks = nodes.withColumn("r", lit(scale / n)).checkpointTracked()
       for (round <- 1 to 4) {
         // ranks/outdeg are node-sized: the planner broadcasts them into
         // the edge scan while their estimates fit the session threshold
@@ -2884,19 +2874,17 @@ object Olap {
         // has at most n rows, ~32 B each); beyond the ceiling the join
         // falls back unchanged
         val contribB = graft.operators.Gates.bcastIfUnder(contrib, n, 32L)
-        val ranksPre = nodes
+        // per-round truncation A/B'd against one end-of-loop
+        // checkpoint: the composed 4-layer plan was ~25% SLOWER
+        // (deep-plan optimization + one wide shuffle graph), so the
+        // per-round materialization earns its job here
+        ranks = nodes
           .join(contribB, col("v") === col("dst"), "left_outer")
           .select(
             col("v"),
             expr(s"${base}L + (85 * coalesce(contrib, 0L)) div 100")
               .as("r"))
-        if (round == 2)
-          graft.plans.LoopPlans.dump("q204_rank_round2", ranksPre)
-        // per-round truncation A/B'd against one end-of-loop
-        // checkpoint: the composed 4-layer plan was ~25% SLOWER
-        // (deep-plan optimization + one wide shuffle graph), so the
-        // per-round materialization earns its job here
-        ranks = ranksPre.localCheckpoint()
+          .checkpointTracked()
       }
       ranks
         .select(col("v").as("part_key"), col("r").as("rank_fp"))
@@ -3025,7 +3013,6 @@ object Olap {
   val q194 = Q(
     "q194_pareto_skyline",
     (s, d) => {
-      import graft.Caches.Tracked
       val per = Tables.load(s, d, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(
@@ -3147,7 +3134,6 @@ object Olap {
   val q197 = Q(
     "q197_share_of_parent",
     (s, d) => {
-      import graft.Caches.Tracked
       val rev = Tables.load(s, d, "orders")
         .select(col("o_custkey"), Det.cents(col("o_totalprice")).as("c0"))
         .join(Tables.load(s, d, "customer")
@@ -3215,7 +3201,6 @@ object Olap {
   val q206 = Q(
     "q206_min_cost_supplier",
     (s, d) => {
-      import graft.Caches.Tracked
       val unitCents = expr(
         s"${Det.centsSql("l_extendedprice")}" +
           " div CAST(l_quantity AS BIGINT)").as("unit_cents")
@@ -3296,7 +3281,6 @@ object Olap {
   val q207 = Q(
     "q207_large_volume_orders",
     (s, d) => {
-      import graft.Caches.Tracked
       val oq = Tables.load(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast(LongType)).as("sum_qty"))
@@ -3358,7 +3342,6 @@ object Olap {
   val q208 = Q(
     "q208_excess_suppliers",
     (s, d) => {
-      import graft.Caches.Tracked
       val sq = Tables.load(s, d, "lineitem")
         .filter(year(to_date(col("l_shipdate"))) === lastFullYear(s, d))
         .groupBy(col("l_partkey"), col("l_suppkey"))
@@ -3424,7 +3407,6 @@ object Olap {
   val q209 = Q(
     "q209_important_parts",
     (s, d) => {
-      import graft.Caches.Tracked
       val pv = Tables.load(s, d, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sum(Det.cents(col("l_extendedprice"))).as("value_c"))
@@ -3669,7 +3651,6 @@ object Olap {
   val q226 = Q(
     "q226_top_supplier",
     (s, d) => {
-      import graft.Caches.Tracked
       val py = lastFullYear(s, d)
       val rev = Tables.load(s, d, "lineitem")
         .filter(to_date(col("l_shipdate")).between(s"$py-01-01",
@@ -3823,7 +3804,7 @@ object Olap {
       val adj = copurchaseAdjW(s, d)
       val source = adj.agg(min(col("src"))).first().getLong(0)
       var dist = Seq((source, 0L)).toDF("part_key", "cost")
-        .localCheckpoint()
+        .checkpointTracked()
       // node-sized dist broadcast under the measured-count gate (r10 —
       // the q192 rationale: estimates over a checkpointed frame fall
       // back to per-round edge shuffles at 50× scale)
@@ -3906,7 +3887,7 @@ object Olap {
             keep.select(col("v").as("dst")), counts.head), Seq("dst"),
             "left_semi")
           .select(col("src"), col("dst"))
-          .localCheckpoint()
+          .checkpointTracked()
       }
       val converged = counts.head == counts.tail.head
       // survivors of round 8 whose neighbours were peeled IN round 8 can
@@ -3963,7 +3944,6 @@ object Olap {
   val q278 = Q(
     "q278_clustering_coeff",
     (s, d) => {
-      import graft.Caches.Tracked
       val e = copurchasePairs(s, d).select(col("a"), col("b"))
         .persistTracked()
       // r9 (the q167/q427 cut): triples a<b<c enumerated from sorted
@@ -4045,7 +4025,6 @@ object Olap {
   val q279 = Q(
     "q279_link_prediction",
     (s, d) => {
-      import graft.Caches.Tracked
       val e = copurchasePairs(s, d).select(col("a"), col("b"))
         .persistTracked()
       val adj = e.select(col("a").as("src"), col("b").as("dst"))
@@ -4127,7 +4106,6 @@ object Olap {
     "q280_acf",
     (s, d) => {
       import s.implicits._
-      import graft.Caches.Tracked
       val daily = Tables.load(s, d, "lineitem")
         .groupBy(to_date(col("l_shipdate")).as("day"))
         .agg(sum(Det.cents(col("l_extendedprice"))).as("c"))
@@ -4324,7 +4302,7 @@ object Olap {
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("src").as("v"), col("lbl"))
-          .localCheckpoint()
+          .checkpointTracked()
       }
       val sz = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comm_size"))
       labels.join(sz, Seq("lbl"))
@@ -4506,7 +4484,6 @@ object Olap {
         .withColumn("layout", lit(layout))
       // self-joined below — persist, or the overlap join re-runs the
       // whole stats lineage per side (the round-1 no-CSE invariant)
-      import graft.Caches.Tracked
       val st = stats("hash", "hash_file")
         .unionByName(stats("range", "range_file")).persistTracked()
       st.as("a")
@@ -4593,7 +4570,6 @@ object Olap {
     "q296_curve_locality",
     (s, d) => {
       import s.implicits._
-      import graft.Caches.Tracked
       val curves = CurveCells.toDF("cx", "cy", "curve", "cell")
       val li = Tables.load(s, d, "lineitem")
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
@@ -5010,7 +4986,6 @@ object Olap {
     "q337_theil_sen",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      import graft.Caches.Tracked
       val monthly = Tables.load(s, d, "lineitem")
         .groupBy((year(col("l_shipdate")) * 12 +
           month(col("l_shipdate"))).cast(LongType).as("mx"))
@@ -5283,7 +5258,6 @@ object Olap {
     "q361_cross_correlation",
     (s, d) => {
       import s.implicits._
-      import graft.Caches.Tracked
       val monthly = Tables.load(s, d, "orders")
         .groupBy((year(col("o_orderdate")) * 12 +
           month(col("o_orderdate"))).as("mi"))
@@ -5367,13 +5341,12 @@ object Olap {
     "q369_harmonic_centrality",
     (s, d) => {
       import s.implicits._
-      import graft.Caches.Tracked
       val adj = copurchaseAdj(s, d)
       val seeds = adj.select(col("src")).distinct()
         .orderBy(col("src")).limit(4)
         .as[Long].collect() // bounded seed set by design
       var levels = seeds.toSeq.map(v => (v, v, 0L))
-        .toDF("source", "v", "dist").localCheckpoint()
+        .toDF("source", "v", "dist").checkpointTracked()
       var frontier = levels
       // measured-count broadcast gate (r10 — the q192 rationale)
       var frontierCnt = seeds.length.toLong
@@ -5392,7 +5365,7 @@ object Olap {
           "q369")
         frontierCnt = cnt
         levelsCnt += frontierCnt
-        levels = levels.unionAll(next).localCheckpoint()
+        levels = levels.unionAll(next).checkpointTracked()
         frontier = next
       }
       levels.filter(col("dist") >= 1)
@@ -5473,7 +5446,6 @@ object Olap {
     "q370_voptimal_histogram",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      import graft.Caches.Tracked
       val buckets = Tables.load(s, d, "orders")
         .select(expr(s"${Det.centsSql("o_totalprice")} div 1000").as("x"))
         .groupBy(expr("x div 2000").as("b"))
@@ -5843,7 +5815,6 @@ object Olap {
     "q400_logrank_test",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      import graft.Caches.Tracked
       val base = Tables.load(s, d, "customer")
         .select(col("c_custkey").as("key"),
           expr("(c_custkey * 2654435761L) % 2").as("g"),
@@ -5978,7 +5949,6 @@ object Olap {
   val q407 = Q(
     "q407_mann_kendall",
     (s, d) => {
-      import graft.Caches.Tracked
       val monthly = Tables.load(s, d, "orders")
         .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
         .agg(sum(Det.cents(col("o_totalprice"))).as("x"))
@@ -6181,7 +6151,6 @@ object Olap {
   val q410 = Q(
     "q410_hampel_outliers",
     (s, d) => {
-      import graft.Caches.Tracked
       val daily = Tables.load(s, d, "orders")
         .groupBy(col("o_orderdate").as("dt"),
           (dayofmonth(col("o_orderdate")) === 15 &&
@@ -6272,7 +6241,6 @@ object Olap {
   val q415 = Q(
     "q415_pettitt_test",
     (s, d) => {
-      import graft.Caches.Tracked
       val monthly = Tables.load(s, d, "orders")
         .groupBy(date_trunc("month", col("o_orderdate")).as("mo"))
         .agg(sum(Det.cents(col("o_totalprice"))).as("x"))
@@ -6391,7 +6359,6 @@ object Olap {
   val q417 = Q(
     "q417_ljung_box",
     (s, d) => {
-      import graft.Caches.Tracked
       val daily = Tables.load(s, d, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(Det.cents(col("o_totalprice"))).as("c"))
@@ -6528,7 +6495,6 @@ object Olap {
   val q418 = Q(
     "q418_runs_test",
     (s, d) => {
-      import graft.Caches.Tracked
       val daily = Tables.load(s, d, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(Det.cents(col("o_totalprice"))).as("c"))
@@ -6663,7 +6629,6 @@ object Olap {
   val q427 = Q(
     "q427_ktruss",
     (s, d) => {
-      import graft.Caches.Tracked
       // r9: no up-front distinct — collect_set dedups per basket
       val op = Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
@@ -6727,19 +6692,17 @@ object Olap {
       for (round <- 1 to 3) {
         // one checkpoint per round: survivors, dead edges and (when
         // converged) the final readout all read this frame
-        val supPre = support(adj, counts.head, nVerts)
-        graft.plans.LoopPlans.dump(s"q427_support_round$round", supPre)
         // survivor count observed during the support checkpoint job
         // (r10, §2.4) — no per-round filtered-count job
         val obsS = new org.apache.spark.sql.Observation(s"q427_s$round")
-        val sup = supPre
+        val sup = support(adj, counts.head, nVerts)
           .observe(obsS,
             sum(when(col("supp") >= 2L, 1L).otherwise(0L)).as("n"))
-          .localCheckpoint()
+          .checkpointTracked()
         // the previous round's adjacency cache is dead once the new
         // round's support has materialized (ADVICE r9: the per-round
         // persists otherwise accrete until query end)
-        if (prevAdj != null) prevAdj.unpersist(blocking = false)
+        if (prevAdj != null) graft.Caches.free(prevAdj)
         lastSup = sup.filter(col("supp") >= 2L)
         val newCnt =
           obsS.get("n") match { case n: Long => n; case _ => 0L }
@@ -6764,7 +6727,6 @@ object Olap {
               .otherwise(array_except(col("nbrs"), col("dw"))).as("nbrs"))
           .filter(size(col("nbrs")) > 0)
           .persistTracked()
-        graft.plans.LoopPlans.dump(s"q427_adj_round${round + 1}", adj)
         nVerts = math.min(nVerts, 2 * newCnt)
       }
       // converged ⟺ round 3 peeled nothing ⟺ the survivor set equals
@@ -6844,7 +6806,6 @@ object Olap {
   val q430 = Q(
     "q430_palma_ratio",
     (s, d) => {
-      import graft.Caches.Tracked
       val rev = Tables.load(s, d, "orders")
         .groupBy(col("o_custkey").as("ck"))
         .agg(sum(Det.cents(col("o_totalprice"))).as("r"))
@@ -6935,7 +6896,6 @@ object Olap {
   val q433 = Q(
     "q433_cohort_retention",
     (s, d) => {
-      import graft.Caches.Tracked
       val cm = Tables.load(s, d, "orders")
         .select(col("o_custkey").as("ck"),
           date_trunc("month", col("o_orderdate")).as("m"))
@@ -7071,11 +7031,10 @@ object Olap {
   val q435 = Q(
     "q435_betweenness",
     (s, d) => {
-      import graft.Caches.Tracked
       val adj = copurchaseAdj(s, d)
       val pivots = adj.select(col("src").as("v")).distinct()
         .orderBy(md5(col("v").cast(StringType)), col("v")).limit(8)
-        .select(col("v").as("p")).localCheckpoint()
+        .select(col("v").as("p")).checkpointTracked()
       // forward: levels l0..l3, each (p, v, sigma) with sigma = #
       // shortest p→v paths; levels are disjoint per pivot (anti-join)
       // per-pivot level frames are node-sized: broadcast into the
@@ -7126,8 +7085,8 @@ object Olap {
             "CAST(0 AS DOUBLE), (acc, t) -> acc + t)").as("delta"))
       }
       val d3 = l3.select(col("p"), col("v"), lit(0.0).as("delta"))
-      val d2 = deltaStep(l2, c2, l3, c3, d3).localCheckpoint()
-      val d1 = deltaStep(l1, c1, l2, c2, d2).localCheckpoint()
+      val d2 = deltaStep(l2, c2, l3, c3, d3).checkpointTracked()
+      val d1 = deltaStep(l1, c1, l2, c2, d2).checkpointTracked()
       val reached = Seq(l1, l2, l3)
         .map(_.select(col("p"), col("v"))).reduce(_ unionAll _)
       val deltas = d1.unionAll(d2)

@@ -884,7 +884,7 @@ object Sim {
               .orderBy(desc("score"), col("cid"))))
           .filter(col("rn") === 1)
           .select(col("qid"), lit(t).as("rank"), col("cid"), col("score"))
-          .localCheckpoint()
+          .checkpointTracked()
         selected = if (selected == null) winner else selected.unionAll(winner)
         out = selected
       }
@@ -2025,7 +2025,7 @@ object Sim {
           .groupBy(col("i"))
           .agg(expr("aggregate(array_sort(collect_list(struct(j, t))), " +
             "CAST(0 AS DOUBLE), (acc, x) -> acc + x.t)").as("wi"))
-          .localCheckpoint()
+          .checkpointTracked()
         nrm = w.agg(
           sqrt(expr("aggregate(array_sort(collect_list(struct(i, wi))), " +
             "CAST(0 AS DOUBLE), (acc, x) -> acc + x.wi * x.wi)"))

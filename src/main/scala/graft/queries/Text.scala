@@ -2203,22 +2203,20 @@ object Text {
       val n = deg.count()
       import graft.operators.Gates.bcastIfUnder
       var ranks = deg.select(col("src").as("w"), lit(1048576L).as("pr"))
-        .localCheckpoint()
+        .checkpointTracked()
       for (round <- 1 to 3) {
         val contrib = edgesD
           .join(bcastIfUnder(ranks, n), edgesD("src") === ranks("w"))
           .select(col("dst"), expr("(pr * wt) div deg").as("c"))
           .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val ranksPre = deg.select(col("src").as("w"))
+        ranks = deg.select(col("src").as("w"))
           .join(bcastIfUnder(contrib, n), col("w") === col("dst"),
             "left_outer")
           .select(
             col("w"),
             (lit((1048576L * 15L) / 100L) +
               expr("(coalesce(inflow, 0L) * 85) div 100")).as("pr"))
-        if (round == 2)
-          graft.plans.LoopPlans.dump("q111_rank_round2", ranksPre)
-        ranks = ranksPre.localCheckpoint()
+          .checkpointTracked()
       }
       ranks.orderBy(col("pr").desc, col("w")).limit(20)
     },

@@ -1,19 +1,32 @@
 package graft
 
-import graft.queries.{Curation, Dedup}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
+
+import scala.jdk.CollectionConverters._
+
+import graft.queries.{Core, Curation, Dedup, Olap, Q}
 
 /** Persist-lifecycle contract: a query may persist intermediates for its
-  * self-joins, but after its action completes and the harness calls
-  * Caches.release(), NO cached block may remain — a long-lived session
-  * (or a 60+-query bench sweep) must not accrete memory pressure from
-  * earlier queries (round-2 judge item #9).
+  * self-joins and checkpoint its iterative rounds, but after its action
+  * completes and the harness calls Caches.release(), NO cached block may
+  * remain — a long-lived session (or a 60+-query bench sweep) must not
+  * accrete memory pressure from earlier queries (round-2 judge item #9).
   */
 class CacheHygieneSpec extends SparkSpec {
 
-  private def assertReleased(name: String)(run: => Long): Unit = {
-    Caches.release() // clean slate from any earlier suite
+  private def persistentIds: String =
+    spark.sparkContext.getPersistentRDDs.keys.toSeq.sorted.mkString(",")
+
+  /** A clean slate: this thread's ledger and any block an earlier suite
+    * left behind. */
+  private def clearAll(): Unit = {
+    Caches.release()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
+  }
+
+  private def assertReleased(name: String)(run: => Long): Unit = {
+    clearAll()
     assert(run > 0L, s"$name returned no rows")
     assert(
       spark.sparkContext.getPersistentRDDs.nonEmpty,
@@ -21,8 +34,7 @@ class CacheHygieneSpec extends SparkSpec {
     Caches.release()
     assert(
       spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"$name left persisted RDDs after release: " +
-        spark.sparkContext.getPersistentRDDs.keys.mkString(","))
+      s"$name left persisted RDDs after release: $persistentIds")
   }
 
   test("q29 simhash releases every persisted intermediate") {
@@ -31,5 +43,52 @@ class CacheHygieneSpec extends SparkSpec {
 
   test("q60 curation funnel releases every persisted intermediate") {
     assertReleased("q60")(Curation.q60.run(spark, sf001).count())
+  }
+
+  test("q274 k-core releases every per-round checkpoint") {
+    assertReleased("q274")(Olap.q274.run(spark, sf001).count())
+  }
+
+  test("q68 dedup clusters release the connected-components checkpoints") {
+    assertReleased("q68")(Dedup.q68.run(spark, sf001).count())
+  }
+
+  test("concurrent queries release only their own blocks") {
+    // two checkpointing queries run next to two threads looping the
+    // dashboard queries; each thread releases its own ledger after each
+    // collect(). Freeing another thread's checkpoint would fail that
+    // query ("checkpoint block not found") or change its rows, and a
+    // checkpoint off the ledger would still be registered at the end.
+    val dashboards = Seq(Core.q01, Core.q02, Core.q03, Core.q04)
+    def rows(q: Q): Seq[org.apache.spark.sql.Row] =
+      try q.run(spark, sf001).collect().toSeq
+      finally Caches.release()
+    clearAll()
+    val expected = (Seq(Dedup.q68, Olap.q274) ++ dashboards)
+      .map(q => q.name -> rows(q)).toMap
+    clearAll()
+    val failures = new ConcurrentLinkedQueue[String]()
+    def check(q: Q): Unit =
+      try {
+        val got = rows(q)
+        if (got != expected(q.name))
+          failures.add(s"${q.name}: ${got.size} rows differ from sequential")
+      } catch {
+        case e: Throwable => failures.add(s"${q.name}: $e")
+      }
+    val plans: Seq[Seq[Q]] = Seq(
+      Seq.fill(2)(Dedup.q68),
+      Seq.fill(2)(Olap.q274),
+      Seq.fill(3)(dashboards).flatten,
+      Seq.fill(3)(dashboards.reverse).flatten)
+    val pool = Executors.newFixedThreadPool(plans.size)
+    try {
+      val tasks = plans.map(qs =>
+        (() => qs.foreach(check)): Callable[Unit])
+      pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
+    } finally pool.shutdown()
+    assert(failures.isEmpty, failures.asScala.mkString("; "))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"blocks left after every thread released: $persistentIds")
   }
 }

@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's environment and config surface is deliberate: a new
   * `SPARK_GRAFT_*` env var or `spark.graft.*` session key read in
-  * `src/main/scala` fails here until it is added below. */
+  * `src/main/scala` fails here until it is added below. So is its cache
+  * ownership: every persist and checkpoint goes through `Caches`. */
 class EnvKnobSpec extends AnyFunSuite {
 
-  private val allowedEnv = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_LOOP_PLANS")
+  private val allowedEnv = Set("SPARK_GRAFT_CPUS")
 
   /** The flag-gated optimizer rules' switches and the summary rewrite's
     * path/fact; every other tunable is a constant in code. */
@@ -34,20 +35,29 @@ class EnvKnobSpec extends AnyFunSuite {
     * is spelled once, as the constant its reader passes to the conf. */
   private val confLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)\"".r
 
-  private def literalsInMain(literal: Regex): Set[String] = {
+  /** Persist and checkpoint calls on code lines. */
+  private val cacheCall =
+    """\.(localCheckpoint|checkpoint|persist)\(|\.cache\(\)""".r
+
+  /** Every code line of `src/main/scala` (comment lines are skipped),
+    * with the file it is in. */
+  private def mainCodeLines: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
     val files = Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    def reads(f: Path): Seq[String] = {
-      val code = Files.readAllLines(f).asScala.filterNot { l =>
+    files.flatMap { f =>
+      Files.readAllLines(f).asScala.filterNot { l =>
         val t = l.trim
         t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-      }
-      code.flatMap(l => literal.findAllMatchIn(l).map(_.group(1))).toSeq
+      }.map(f -> _)
     }
-    files.flatMap(reads).toSet
   }
+
+  private def literalsInMain(literal: Regex): Set[String] =
+    mainCodeLines.flatMap { case (_, l) =>
+      literal.findAllMatchIn(l).map(_.group(1))
+    }.toSet
 
   test("src/main reads exactly the allowed SPARK_GRAFT_* env vars") {
     val found = literalsInMain(envLiteral)
@@ -59,5 +69,16 @@ class EnvKnobSpec extends AnyFunSuite {
     val found = literalsInMain(confLiteral)
     assert(found == allowedConf,
       s"added: ${found -- allowedConf}; gone: ${allowedConf -- found}")
+  }
+
+  test("src/main persists and checkpoints only through Caches") {
+    // a frame cached or checkpointed elsewhere is off the per-thread
+    // ledger, so Caches.release() would leave its blocks behind
+    val hits = mainCodeLines.collect {
+      case (f, l) if f.getFileName.toString != "Caches.scala" &&
+          cacheCall.findFirstIn(l).nonEmpty => s"$f: ${l.trim}"
+    }
+    assert(hits.isEmpty,
+      s"${hits.size} calls outside Caches:\n${hits.mkString("\n")}")
   }
 }
