@@ -15,7 +15,9 @@ object Sessions {
     env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
 
-  /** `local[cpus]` session with shuffle partitions = cpus. */
+  /** `local[cpus]` session with shuffle partitions = cpus. The
+    * `MapPartitionsRDD` logger is raised to ERROR: it warns "was locally
+    * checkpointed" on every checkpoint free `Caches.release()` makes. */
   def local(
       cpus: String = defaultCpus(),
       logLevel: String = "WARN"): SparkSession = {
@@ -26,6 +28,9 @@ object Sessions {
     Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

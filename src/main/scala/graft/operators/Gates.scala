@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{broadcast, count_if, lit}
 import graft.Caches.Tracked
 
 /** Shared size ceiling for MEASURED broadcast decisions inside
@@ -26,28 +28,28 @@ object Gates {
     * `bytesPerRow` (64 B default — the HashedRelation cost of a few
     * numeric columns) fits the iteration ceiling; unchanged otherwise,
     * so the join falls back to its shuffled shape at corpus scale. */
-  def bcastIfUnder(
-      df: org.apache.spark.sql.DataFrame,
-      rows: Long,
-      bytesPerRow: Long = 64L): org.apache.spark.sql.DataFrame =
-    if (rows * bytesPerRow <= iterBroadcastBytes)
-      org.apache.spark.sql.functions.broadcast(df)
-    else df
+  def bcastIfUnder(df: DataFrame, rows: Long, bytesPerRow: Long = 64L)
+      : DataFrame =
+    if (rows * bytesPerRow <= iterBroadcastBytes) broadcast(df) else df
 
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** A ledgered checkpoint (`checkpointTracked`) with the row count
+  /** A ledgered checkpoint (`checkpointTracked`) with a row count
     * OBSERVED during the checkpoint's own materialization job (r10,
     * guide §1.2/§2.4 — don't run a second pass for a number the
     * materializing job already saw): the exact count that gates the next
     * round's broadcast otherwise costs one extra scan job per iteration
-    * round. Returns the checkpointed frame and its count. */
-  def checkpointCounted(df: org.apache.spark.sql.DataFrame, tag: String)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    import org.apache.spark.sql.functions.{count, lit}
-    val obs = new org.apache.spark.sql.Observation(
-      s"${tag}_${obsSeq.incrementAndGet()}")
-    val ck = df.observe(obs, count(lit(1)).as("n")).checkpointTracked()
+    * round. `where` narrows the count to the rows it holds (every row by
+    * default), and `shape` runs between the observation and the
+    * checkpoint, so the count also sees rows the checkpointed frame
+    * drops (the tolerant CSV read counts its malformed rows and keeps
+    * the rest). Returns the checkpointed frame and its count. */
+  def checkpointCounted(df: DataFrame, tag: String,
+      where: Column = lit(true), shape: DataFrame => DataFrame = identity)
+      : (DataFrame, Long) = {
+    val obs = new Observation(s"${tag}_${obsSeq.incrementAndGet()}")
+    val ck = shape(df.observe(obs, count_if(where).as("n")))
+      .checkpointTracked()
     (ck, obs.get("n") match { case n: Long => n; case _ => 0L })
   }
 }

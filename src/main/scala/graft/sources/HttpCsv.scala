@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.Caches.Tracked
+import graft.operators.Gates
 
 /** HTTP CSV ingestion — the transport the reference actually uses for S1
   * (it streams the public CSV from a URL into the engine, reference:
@@ -75,11 +75,13 @@ object HttpCsv {
     * and counted; one more FAILS the load. DROPMALFORMED alone cannot
     * express the "fail beyond N" contract — it silently drops any
     * number. PERMISSIVE + corrupt-record column makes the bad rows
-    * first-class: countable, cappable, and quarantinable. The cache is
-    * required (Spark cannot filter on only the corrupt column of an
-    * un-materialized CSV relation) and is what a real loader wants
-    * anyway — parse once, then both the error audit and the clean
-    * projection read the parsed batch. */
+    * first-class: countable, cappable, and quarantinable. One job parses
+    * the CSV: an observation on the raw read counts the malformed rows
+    * while the same pass drops them and checkpoints the clean rows
+    * ([[Gates.checkpointCounted]]), which the caller's write then reads.
+    * The observed frame keeps every data column, so every typed column
+    * is parsed and checked. The checkpoint is ledgered; the caller frees
+    * it with `Caches.release()`, also after a throw over the cap. */
   def readCsvTolerant(
       spark: SparkSession,
       dir: String,
@@ -95,12 +97,13 @@ object HttpCsv {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corrupt)
       .csv(dir)
-      .persistTracked()
-    val bad = raw.filter(col(corrupt).isNotNull).count()
+    val (clean, bad) = Gates.checkpointCounted(raw, "csv_malformed",
+      where = col(corrupt).isNotNull,
+      shape = _.filter(col(corrupt).isNull).drop(corrupt))
     if (bad > maxErrors)
       throw new IllegalStateException(
         s"CSV load: $bad malformed rows exceed the error tolerance " +
           s"$maxErrors (reference input_format_allow_errors_num contract)")
-    (raw.filter(col(corrupt).isNull).drop(corrupt), bad)
+    (clean, bad)
   }
 }

@@ -71,6 +71,8 @@ object IngestFull {
     val parts = Files.list(Paths.get(csvDir)).toArray.map(_.toString)
       .filter(_.endsWith(".csv")).sorted
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // non-daemon workers: shut down in `finally`, or the JVM never exits
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     try {
       parts.zipWithIndex.foreach { case (p, i) =>
         server.createContext(s"/shard$i.csv", exchange => {
@@ -82,7 +84,7 @@ object IngestFull {
           try Files.copy(Paths.get(p), os) finally os.close()
         })
       }
-      server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
+      server.setExecutor(pool)
       server.start()
       val port = server.getAddress.getPort
       val urls = parts.indices.map(i => s"http://127.0.0.1:$port/shard$i.csv")
@@ -144,6 +146,7 @@ object IngestFull {
       println(f"[ingestfull] total ${secs(t0)}%.1f s")
     } finally {
       server.stop(0)
+      pool.shutdown()
       spark.stop()
     }
   }

@@ -47,11 +47,13 @@ object IngestJob {
     * are checked against the observed values after the job commits.
     * This is how a 100 TB materialization validates itself: a post-hoc
     * validation query would re-read everything it just wrote, and a
-    * pre-write `.count()` would scan the input twice. A failed gate
-    * throws AFTER the write (Spark observes during the action), so
-    * callers treating gates as transactional should write to a staging
-    * path and promote on success — the TsvSource commit pattern.
-    * Returns the observed metric map for reporting. */
+    * pre-write `.count()` would scan the input twice. The job writes
+    * into the hidden sibling `.<name>.staging`; only when every gate
+    * passes is the old `out` deleted and the staging directory renamed
+    * into place (through `out`'s Hadoop `FileSystem`), so a rejected or
+    * failed write leaves `out` as it was. A reader between the delete
+    * and the rename sees no table, never a rejected one (the
+    * `atomicPublish` direction). Returns the observed metric map. */
   def gatedParquetWrite(
       df: DataFrame,
       out: String,
@@ -65,20 +67,30 @@ object IngestJob {
     require(unknown.isEmpty,
       s"gates reference unobserved metrics: ${unknown.mkString(", ")} " +
         s"(observed: ${metrics.map(_._1).mkString(", ")})")
+    val target = new org.apache.hadoop.fs.Path(out)
+    val fs = target.getFileSystem(
+      df.sparkSession.sessionState.newHadoopConf())
+    val staged = new org.apache.hadoop.fs.Path(
+      fs.makeQualified(target).getParent, s".${target.getName}.staging")
     val obs = org.apache.spark.sql.Observation()
-    df.observe(
-        obs,
-        metrics.head._2.as(metrics.head._1),
-        metrics.tail.map { case (n, c) => c.as(n) }: _*)
-      .write.mode("overwrite").parquet(out)
-    val seen = obs.get
-    val failed = gates.collect {
-      case (name, ok) if !ok(seen(name)) => s"$name=${seen(name)}"
-    }
-    require(failed.isEmpty,
-      s"data-quality gates failed after write to $out: " +
-        failed.mkString(", "))
-    seen
+    try {
+      df.observe(
+          obs,
+          metrics.head._2.as(metrics.head._1),
+          metrics.tail.map { case (n, c) => c.as(n) }: _*)
+        .write.mode("overwrite").parquet(staged.toString)
+      val seen = obs.get
+      val failed = gates.collect {
+        case (name, ok) if !ok(seen(name)) => s"$name=${seen(name)}"
+      }
+      require(failed.isEmpty,
+        s"data-quality gates failed after write to $out: " +
+          failed.mkString(", "))
+      fs.delete(target, true)
+      if (!fs.rename(staged, target))
+        throw new java.io.IOException(s"could not publish $staged as $out")
+      seen
+    } finally fs.delete(staged, true) // gone already once published
   }
 
   /** Explicit CSV schema (S1: "apply schema to schemaless CSV" — reference

@@ -73,32 +73,70 @@ class HttpIngestSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
-  test("bounded error tolerance: drops up to N malformed rows, fails beyond") {
-    val s = spark
-    import graft.sources.{HttpCsv, IngestJob}
+  /** 3 good rows + 3 malformed: wrong arity, untyped garbage, and a
+    * row whose only fault is its late `value` column. */
+  private def tolerantFixture(): String = {
     val dir = Files.createTempDirectory("graft_csv_tolerant")
-    // 3 good rows + 2 malformed (wrong arity / untyped garbage)
     Files.writeString(dir.resolve("part.csv"),
       """event_id,user_id,event_type,ts_str,value,props
         |1,10,click,2024-01-01 00:00:00.000000,1.5,a
         |garbage-without-commas
         |2,11,view,2024-01-01 00:00:01.000000,2.5,b
         |not,a,valid,row,with,extra,columns,entirely
+        |4,13,view,2024-01-01 00:00:03.000000,many,d
         |3,12,click,2024-01-01 00:00:02.000000,3.5,c
         |""".stripMargin)
+    dir.toString
+  }
+
+  test("bounded error tolerance: drops up to N malformed rows, fails beyond") {
+    val s = spark
+    import graft.sources.{HttpCsv, IngestJob}
+    val dir = tolerantFixture()
     try {
       val (clean, bad) = HttpCsv.readCsvTolerant(
-        s, dir.toString, IngestJob.eventsCsvSchema, maxErrors = 2)
-      assert(bad === 2, "both malformed rows counted")
+        s, dir, IngestJob.eventsCsvSchema, maxErrors = 3)
+      // exact: a parse pruned to fewer columns would miss `value=many`
+      assert(bad === 3, "every malformed row counted, late columns too")
       assert(clean.count() === 3, "good rows all survive")
+      assert(clean.select("event_id").count() === 3,
+        "a pruned read of the clean rows still drops the bad value")
       assert(clean.columns.toSeq === IngestJob.eventsCsvSchema.map(_.name),
         "corrupt-record column must not leak into the clean projection")
       // one fewer allowed error: the load must FAIL, not silently drop
       val e = intercept[IllegalStateException] {
         HttpCsv.readCsvTolerant(
-          s, dir.toString, IngestJob.eventsCsvSchema, maxErrors = 1)
+          s, dir, IngestJob.eventsCsvSchema, maxErrors = 2)
       }
       assert(e.getMessage.contains("exceed the error tolerance"))
     } finally Caches.release()
+  }
+
+  test("tolerant read + gated write parse the CSV once, in two jobs") {
+    import graft.sources.{HttpCsv, IngestJob}
+    val dir = tolerantFixture()
+    val out = Files.createTempDirectory("graft_csv_once")
+      .resolve("t.parquet").toString
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ((bad, seen), jobs) = org.apache.spark.JobCount.during(spark) {
+      val (clean, bad) = HttpCsv.readCsvTolerant(
+        spark, dir, IngestJob.eventsCsvSchema, maxErrors = 3)
+      (bad, IngestJob.gatedParquetWrite(clean, out,
+        Seq("rows" -> count(lit(1))), Map("rows" -> (_ == 3L))))
+    }
+    Caches.release()
+    assert(bad === 3 && seen("rows") === 3L)
+    assert(jobs === 2, "one checkpointing parse, then the write")
+    assert(sc.getPersistentRDDs.keySet === before,
+      "release() frees the parse's blocks")
+    // over the cap: the throw leaves nothing once released either
+    intercept[IllegalStateException] {
+      HttpCsv.readCsvTolerant(
+        spark, dir, IngestJob.eventsCsvSchema, maxErrors = 2)
+    }
+    Caches.release()
+    assert(sc.getPersistentRDDs.keySet === before,
+      "release() frees the blocks of a load over the cap")
   }
 }

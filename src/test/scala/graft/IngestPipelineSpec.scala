@@ -103,7 +103,7 @@ class IngestPipelineSpec extends SparkSpec {
     // and the write itself really committed
     assert(spark.read.parquet(s"$base/ok.parquet").count()
       == expect.getLong(0))
-    // a violated gate throws AFTER the write, naming the metric
+    // a violated gate throws, naming the metric, and publishes nothing
     val e = intercept[IllegalArgumentException] {
       IngestJob.gatedParquetWrite(
         ev, s"$base/bad.parquet",
@@ -111,6 +111,34 @@ class IngestPipelineSpec extends SparkSpec {
         Map("n_rows" -> (_ => false)))
     }
     assert(e.getMessage.contains("n_rows"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/bad.parquet")))
+  }
+
+  test("gatedParquetWrite: a rejected rewrite leaves the published table") {
+    import graft.sources.IngestJob
+    val base = Files.createTempDirectory("graft_gate_publish")
+    val out = base.resolve("events.parquet").toString
+    val ev = Tables.load(spark, sf001, "events")
+    val n = ev.count()
+    val rows = Seq("n_rows" -> count(lit(1)))
+    IngestJob.gatedParquetWrite(ev, out, rows, Map("n_rows" -> (_ == n)))
+    def published() =
+      spark.read.parquet(out).orderBy("event_id").collect().toSeq
+    val good = published()
+    assert(good.length == n)
+    // the rewrite loses rows and its gate rejects it: the good table
+    // must still be there, row for row
+    val e = intercept[IllegalArgumentException] {
+      IngestJob.gatedParquetWrite(
+        ev.limit(5), out, rows, Map("n_rows" -> (_ == n)))
+    }
+    assert(e.getMessage.contains("n_rows=5"))
+    val now = published()
+    assert(now.length == n,
+      s"a rejected write replaced the table: ${now.length} rows")
+    assert(now == good)
+    val left = Files.list(base).toArray.map(_.toString).toSeq
+    assert(left == Seq(out), s"staging left behind: $left")
   }
 
   test("xml roundtrip survives markup-significant characters") {
