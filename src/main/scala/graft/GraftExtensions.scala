@@ -51,13 +51,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bloom membership filter (runtime semi-join pruning without a
     // build-side shuffle)
     checked("bloom_md5", BloomMd5.info)(c => BloomMd5(c.head))
-    // flag-gated percentile→sketch rewrite (SURVEY §7.5c); off by default
-    ext.injectOptimizerRule(_ => graft.plans.ApproxPercentileRewrite)
-    // flag-gated COUNT(DISTINCT)→HLL++ rewrite; off by default
-    ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
-    // materialized-view rewrite: answer matching aggregates from a
-    // registered pre-aggregated summary instead of the fact scan
-    ext.injectOptimizerRule(_ => graft.plans.SummaryRewrite)
     // native as-of join: custom logical node → AsOfJoinExec (the
     // custom-operator ladder's SparkPlan rung)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -1215,8 +1215,9 @@ object Olap {
     * a real latency audit carries). Positions are q115's pure-integer
     * ceil ranks over a (delay, orderkey, linenumber) total order; the
     * mean is one IEEE division of exact integer sum/count. Per-priority
-    * windows are the documented exact-percentile trade-off (SURVEY
-    * §7.6's flag-gated ApproxPercentileRewrite is the 100-TB path). */
+    * windows are the documented exact-percentile trade-off; a query
+    * that wants a sketch instead asks for one by name
+    * (`tdigest_quantile` or `percentile_approx`). */
   val q147 = Q(
     "q147_shipping_delay",
     (s, d) => {
@@ -2535,8 +2536,8 @@ object Olap {
     * same positional arithmetic. Selection by position needs only the
     * cents order (ties collapse to equal values), rn's orderkey
     * tiebreak just makes the window total. Scale: per-group sort, the
-    * q04 discipline (ApproxPercentileRewrite is the stated 100-TB
-    * path, SURVEY §7.6). */
+    * q04 discipline; a query that wants a sketch instead asks for one
+    * by name (`tdigest_quantile` or `percentile_approx`). */
   val q186 = Q(
     "q186_percentile_cont",
     (s, d) => {

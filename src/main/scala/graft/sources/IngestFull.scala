@@ -23,8 +23,9 @@ import org.apache.spark.sql.types._
   * [[HttpCsv.ingestCsvUrls]] distributed fetch to staging →
   * [[HttpCsv.readCsvTolerant]] (PERMISSIVE parse, 1000-error cap, with
   * 500 malformed rows INJECTED to prove the tolerance path engages at
-  * scale) → typed month-partitioned Parquet → the row-count gate →
-  * a partition-pruned read-back whose plan must show PartitionFilters
+  * scale) → typed month-partitioned Parquet, published only when the
+  * row-count gate observed on the write passes
+  * ([[IngestJob.gatedParquetWrite]]) → a partition-pruned read-back whose plan must show PartitionFilters
   * touching one month. Timings + the pruned plan land in
   * `plans/ingest_full.txt`.
   *
@@ -99,22 +100,24 @@ object IngestFull {
       val (clean, bad) = HttpCsv.readCsvTolerant(
         spark, staging, csvSchema, maxErrors = 1000)
 
-      // ---- 4. typed month-partitioned Parquet sink ----
-      val pq = Paths.get(
-        sys.props("java.io.tmpdir"), "graft_ingest_full_pq").toString
-      clean
-        .withColumn("ship_date", to_date(col("ship_date")))
-        .withColumn("ship_month", date_format(col("ship_date"), "yyyy-MM"))
-        .write.mode("overwrite").partitionBy("ship_month").parquet(pq)
-      val loadSecs = secs(tParse)
-      graft.Caches.release()
-
-      // ---- 5. the row-count gate (reference README.md:373-397) ----
-      val got = spark.read.parquet(pq).count()
       require(bad == badRows.toLong,
         s"tolerance path: expected $badRows malformed rows, counted $bad")
-      require(got == expected,
-        s"ROW-COUNT GATE FAILED: ingested $got != source $expected")
+
+      // ---- 4. typed month-partitioned Parquet sink, published only when
+      // the row-count gate (reference README.md:373-397), counted on the
+      // write pass itself, passes ----
+      val pq = Paths.get(
+        sys.props("java.io.tmpdir"), "graft_ingest_full_pq").toString
+      val got = try IngestJob.gatedParquetWrite(
+          clean
+            .withColumn("ship_date", to_date(col("ship_date")))
+            .withColumn("ship_month", date_format(col("ship_date"), "yyyy-MM")),
+          pq,
+          Seq("n_rows" -> count(lit(1))),
+          Map("n_rows" -> (_ == expected)),
+          partitionBy = Seq("ship_month"))("n_rows")
+        finally graft.Caches.release()
+      val loadSecs = secs(tParse)
 
       // ---- 6. partition-pruned read-back ----
       val pruned = spark.read.parquet(pq)

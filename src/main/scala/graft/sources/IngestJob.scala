@@ -53,12 +53,15 @@ object IngestJob {
     * into place (through `out`'s Hadoop `FileSystem`), so a rejected or
     * failed write leaves `out` as it was. A reader between the delete
     * and the rename sees no table, never a rejected one (the
-    * `atomicPublish` direction). Returns the observed metric map. */
+    * `atomicPublish` direction). `partitionBy` names the partition
+    * columns of the written table (none by default). Returns the
+    * observed metric map. */
   def gatedParquetWrite(
       df: DataFrame,
       out: String,
       metrics: Seq[(String, org.apache.spark.sql.Column)],
-      gates: Map[String, Any => Boolean]): Map[String, Any] = {
+      gates: Map[String, Any => Boolean],
+      partitionBy: Seq[String] = Nil): Map[String, Any] = {
     require(metrics.nonEmpty, "observe at least one metric")
     // fail BEFORE the write: a typo'd gate name would otherwise run the
     // whole materialization and then crash on map lookup, with the
@@ -74,11 +77,13 @@ object IngestJob {
       fs.makeQualified(target).getParent, s".${target.getName}.staging")
     val obs = org.apache.spark.sql.Observation()
     try {
-      df.observe(
+      val writer = df.observe(
           obs,
           metrics.head._2.as(metrics.head._1),
           metrics.tail.map { case (n, c) => c.as(n) }: _*)
-        .write.mode("overwrite").parquet(staged.toString)
+        .write.mode("overwrite")
+      (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*))
+        .parquet(staged.toString)
       val seen = obs.get
       val failed = gates.collect {
         case (name, ok) if !ok(seen(name)) => s"$name=${seen(name)}"

@@ -8,21 +8,18 @@ import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's environment and config surface is deliberate: a new
-  * `SPARK_GRAFT_*` env var or `spark.graft.*` session key read in
-  * `src/main/scala` fails here until it is added below. So is its cache
-  * ownership: every persist and checkpoint goes through `Caches`. */
+  * `SPARK_GRAFT_*` env var read in `src/main/scala` fails here until it
+  * is added below, and `src/main/scala` reads no `spark.graft.*` session
+  * key at all. So is its cache ownership: every persist and checkpoint
+  * goes through `Caches`. */
 class EnvKnobSpec extends AnyFunSuite {
 
   private val allowedEnv = Set("SPARK_GRAFT_CPUS")
 
-  /** The flag-gated optimizer rules' switches and the summary rewrite's
-    * path/fact; every other tunable is a constant in code. */
-  private val allowedConf = Set(
-    "spark.graft.approxDistinct.enabled",
-    "spark.graft.approxPercentile.enabled",
-    "spark.graft.summaryRewrite.enabled",
-    "spark.graft.summaryRewrite.path",
-    "spark.graft.summaryRewrite.fact")
+  /** None: every engine tunable is a constant in code, and an
+    * approximate answer is a per-query choice of function
+    * (`tdigest_quantile`, `percentile_approx`, ...), not a session flag. */
+  private val allowedConf = Set.empty[String]
 
   /** Quoted `"SPARK_GRAFT_…"` literals on code lines (comment lines are
     * skipped): main code spells such a name only to read it, from
@@ -32,7 +29,8 @@ class EnvKnobSpec extends AnyFunSuite {
   private val envLiteral = "\"(SPARK_GRAFT_[A-Z0-9_]*)\"".r
 
   /** Quoted `"spark.graft.…"` literals on code lines, likewise: a key
-    * is spelled once, as the constant its reader passes to the conf. */
+    * would be spelled once, as the constant its reader passes to the
+    * conf. */
   private val confLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)\"".r
 
   /** Persist and checkpoint calls on code lines. */

@@ -95,10 +95,21 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("kmv_md5"), "sketch aggregate missing from plan")
   }
 
+  test("q18 month filter prunes the partitioned sink statically") {
+    // a literal predicate on the partition column must reach the scan as
+    // a partition filter, so the read lists only the 1998 month
+    // directories instead of the whole table
+    val plan = formatted("q18_partitioned_sink")
+    val filters = "PartitionFilters: \\[[^\n]*".r.findAllIn(plan).toList
+    assert(filters.exists(f => f.contains("ship_month") &&
+      f.contains(">= 199801") && f.contains("<= 199812")),
+      s"ship_month predicate not pushed to partition pruning:\n$plan")
+  }
+
   test("dynamic partition pruning fires on the partitioned fact table") {
     // STATIC pruning (a literal predicate on the partition column) is
-    // pinned by q18's PartitionFilters artifact; this pins the DYNAMIC
-    // case every star join at 100 TB depends on: the partition-column
+    // pinned by the q18 test above; this pins the DYNAMIC case every
+    // star join at 100 TB depends on: the partition-column
     // predicate arrives at runtime from the FILTERED dim side (here a
     // month dimension cut to one quarter), and Catalyst must inject a
     // dynamicpruning subquery on the fact scan instead of reading all
