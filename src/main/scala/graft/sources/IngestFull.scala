@@ -25,9 +25,9 @@ import org.apache.spark.sql.types._
   * 500 malformed rows INJECTED to prove the tolerance path engages at
   * scale) → typed month-partitioned Parquet, published only when the
   * row-count gate observed on the write passes
-  * ([[IngestJob.gatedParquetWrite]]) → a partition-pruned read-back whose plan must show PartitionFilters
-  * touching one month. Timings + the pruned plan land in
-  * `plans/ingest_full.txt`.
+  * ([[IngestJob.gatedParquetWrite]]) → a partition-pruned read-back
+  * whose plan must show PartitionFilters touching one month. Timings +
+  * the pruned plan land in `plans/ingest_full.txt`.
   *
   * Usage: runMain graft.sources.IngestFull [sfDir] (default sf0.1; the
   * 50x replica is built/reused via BenchScale).
@@ -104,8 +104,8 @@ object IngestFull {
         s"tolerance path: expected $badRows malformed rows, counted $bad")
 
       // ---- 4. typed month-partitioned Parquet sink, published only when
-      // the row-count gate (reference README.md:373-397), counted on the
-      // write pass itself, passes ----
+      // the row-count gate (reference README.md:373-397) passes; the
+      // count is observed on the write pass itself ----
       val pq = Paths.get(
         sys.props("java.io.tmpdir"), "graft_ingest_full_pq").toString
       val got = try IngestJob.gatedParquetWrite(
@@ -119,7 +119,7 @@ object IngestFull {
         finally graft.Caches.release()
       val loadSecs = secs(tParse)
 
-      // ---- 6. partition-pruned read-back ----
+      // ---- 5. partition-pruned read-back ----
       val pruned = spark.read.parquet(pq)
         .filter(col("ship_month") === "1996-03")
         .groupBy(col("l_returnflag"))
